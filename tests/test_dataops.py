@@ -2042,6 +2042,19 @@ def test_ngram_uniqueness_detects_template_spam(spark):
     assert out[("var", 4)] == pytest.approx(1.0)
 
 
+def test_ngram_uniqueness_rejects_max_n_above_packed_width(spark):
+    """The packed gram key holds 4 tokens: 5-grams sharing their first
+    four tokens would collide, so max_n > 4 is refused up front."""
+    from tokens_ts import textops
+
+    df = spark.createDataFrame(
+        [("A", [1, 2, 3, 4, 5]), ("A", [1, 2, 3, 4, 6])],
+        "source string, tokens array<int>",
+    )
+    with pytest.raises(ValueError, match="max_n=5"):
+        textops.ngram_uniqueness(df, max_n=5)
+
+
 def _mmr_ref(qv, cands, k=3, pool=10):
     """Independent greedy MMR reference on e6-rounded sims, 4x integer
     score, nid-asc ties."""

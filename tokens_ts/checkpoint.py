@@ -5,10 +5,12 @@ metrics" (BASELINE.json:14; SURVEY.md §4.4). The unit of work is an
 input partition — `source` in the sandbox, `(source_bucket, day)` at
 10^12 scale; the manifest schema carries both via a string id.
 
-Resume = left_anti join of pending partitions against status='done'
-manifest rows (SURVEY.md J3). Manifest writes are parquet appends of a
-handful of rows per completed batch — atomic enough per partition-file;
-on Iceberg the same append is a snapshot commit.
+Resume = pending partitions minus the status='done' manifest ids
+(SURVEY.md J3): run_backfill collects one control-plane-sized
+partition_summary and takes the difference driver-side; filter_pending
+is the same rule as a broadcast anti-join. Manifest writes are parquet
+appends of a handful of rows per completed batch — atomic enough per
+partition-file; on Iceberg the same append is a snapshot commit.
 
 The token-array-equality invariant travels as `token_checksum`: an
 xor-fold of xxhash64(doc_id, tokens) per partition (order-independent,
@@ -21,8 +23,10 @@ from __future__ import annotations
 import time
 import uuid
 
+import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, Row, SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -121,8 +125,17 @@ def read_manifest(spark: SparkSession, where) -> DataFrame:
                     or "Path does not exist" in msg
                 )
         if missing:
-            return spark.createDataFrame([], MANIFEST_SCHEMA)
+            return _local_manifest(spark, [])
         raise
+
+
+def _local_manifest(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    """Manifest rows as an Arrow-built local relation: no Python RDD and
+    no Python worker, and an empty one plans to zero jobs downstream
+    (a first run's resume collect is free)."""
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(MANIFEST_SCHEMA))
+    )
 
 
 def _align_schema(df: DataFrame) -> DataFrame:
@@ -157,6 +170,27 @@ def done_partitions(spark: SparkSession, where) -> DataFrame:
         .select("partition_id")
         .distinct()
     )
+
+
+def partition_summary(manifest: DataFrame) -> dict[str, dict]:
+    """partition_id → {attempt, done, points_raw} in ONE collect of a
+    (possibly pre-filtered) manifest frame: the highest attempt,
+    whether any attempt completed, and points_raw of the latest
+    completed attempt (max_by skips the null orderings of rows that
+    are not done). Control-plane sized: one row per partition id."""
+    done = F.col("status") == "done"
+    return {
+        r["partition_id"]: r.asDict()
+        for r in manifest.groupBy("partition_id")
+        .agg(
+            F.max("attempt").alias("attempt"),
+            F.bool_or(done).alias("done"),
+            F.max_by(
+                "points_raw", F.when(done, F.struct("ts", "attempt"))
+            ).alias("points_raw"),
+        )
+        .collect()
+    }
 
 
 def is_done(spark: SparkSession, where, partition_id: str) -> bool:
@@ -195,31 +229,33 @@ def record_done(
     job_run_id: str,
     attempt_base: dict[str, int] | None = None,
 ) -> None:
+    """Append one 'done' row per lineage dict (attempt = base + 1) as
+    one coalesced file, built as a local relation (_local_manifest)."""
     now = time.time()
     attempt_base = attempt_base or {}
     rows = [
-        Row(
-            partition_id=r["partition_id"],
-            status="done",
-            rows_in=int(r.get("rows_in", 0)),
-            points_raw=int(r.get("points_raw", 0)),
-            points_1m=int(r.get("points_1m", 0)),
-            points_1h=int(r.get("points_1h", 0)),
-            points_1d=int(r.get("points_1d", 0)),
-            token_checksum=int(r.get("token_checksum") or 0),
-            wall_ms=float(r.get("wall_ms", 0.0)),
-            attempt=int(attempt_base.get(r["partition_id"], 0)) + 1,
-            job_run_id=job_run_id,
-            ts=now,
-            max_event_us=(
+        {
+            "partition_id": r["partition_id"],
+            "status": "done",
+            "rows_in": int(r.get("rows_in", 0)),
+            "points_raw": int(r.get("points_raw", 0)),
+            "points_1m": int(r.get("points_1m", 0)),
+            "points_1h": int(r.get("points_1h", 0)),
+            "points_1d": int(r.get("points_1d", 0)),
+            "token_checksum": int(r.get("token_checksum") or 0),
+            "wall_ms": float(r.get("wall_ms", 0.0)),
+            "attempt": int(attempt_base.get(r["partition_id"], 0)) + 1,
+            "job_run_id": job_run_id,
+            "ts": now,
+            "max_event_us": (
                 None
                 if r.get("max_event_us") is None
                 else int(r["max_event_us"])
             ),
-        )
+        }
         for r in lineage_rows
     ]
-    df = spark.createDataFrame(rows, MANIFEST_SCHEMA).coalesce(1)
+    df = _local_manifest(spark, rows).coalesce(1)
     if isinstance(where, str):
         df.write.mode("append").parquet(where)
     else:

@@ -4,15 +4,19 @@ run_backfill: sequences → extraction → raw tier → 1m → 1h → 1d, one
 partition-pruned distributed job per invocation, resumable at input-
 partition granularity via the checkpoint manifest. Rerunning after a
 crash reprocesses only pending partitions; completed partitions are
-skipped by an anti-join and their tier output is untouched (writes are
-idempotent dynamic partition overwrites).
+skipped (the manifest's done set, read once per invocation) and their
+tier output is untouched (writes are idempotent dynamic partition
+overwrites).
 
 run_increment: append-only micro-batch — recomputes exactly the
 (source, day) tier partitions touched by the new rows, reading back
 only those slices of raw (partition/row-group pruning does the rest).
-This is the batch-incremental realization of "cascading continuous
-aggregates" (BASELINE.json:14): 1h merges 1m partials, 1d merges 1h
-partials, never re-reading raw beyond the touched windows.
+
+Both paths write their tiers through _write_tiers, the batch-incremental
+realization of "cascading continuous aggregates" (BASELINE.json:14):
+1m is rolled up from the raw slice, 1h merges the 1m partials read back
+from the just-written 1m table, and 1d merges the written 1h partials —
+so raw is aggregated once per wave or batch, not once per tier.
 
 All tables live under a Catalog root:
   sequences                     (input; partitioned by source)
@@ -23,6 +27,7 @@ All tables live under a Catalog root:
 
 from __future__ import annotations
 
+import functools
 import statistics
 import time
 from collections.abc import Callable
@@ -48,27 +53,20 @@ def _with_day(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("day", F.to_date(F.col(ts_col)))
 
 
-def _manifest_points(spark: SparkSession, cat: Catalog) -> list[float]:
+def _manifest_points(summary: dict[str, dict]) -> list[float]:
     """points_raw of every committed non-batch partition (latest
-    attempt) — the lineage feed for the salting baseline. Control-plane
-    sized (one value per input partition, the same bound as the
-    attempts collect in run_backfill). Collected ONCE per invocation;
-    waves fold their own just-measured points in driver-side, so the
-    baseline stays current without re-scanning the manifest per wave."""
+    completed attempt) in a checkpoint.partition_summary — the lineage
+    feed for the salting baseline. run_backfill derives it from its one
+    manifest collect per invocation; waves fold their own just-measured
+    points in driver-side, so the baseline stays current without
+    re-scanning the manifest per wave."""
     return [
-        float(r["pts"])
-        for r in checkpoint.read_manifest(spark, cat)
-        .where(
-            (F.col("status") == "done")
-            # plain-source ids only: 'batch:'/'retention:' marker rows
-            # carry no per-partition ingest volume and would drag the
-            # median toward 0
-            & (~F.col("partition_id").contains(":"))
-        )
-        .groupBy("partition_id")
-        .agg(F.max_by("points_raw", F.struct("ts", "attempt")).alias("pts"))
-        .collect()
-        if r["pts"] is not None
+        float(r["points_raw"])
+        for pid, r in summary.items()
+        # plain-source ids only: 'batch:'/'retention:' marker rows
+        # carry no per-partition ingest volume and would drag the
+        # median toward 0
+        if r["done"] and ":" not in pid and r["points_raw"] is not None
     ]
 
 
@@ -104,7 +102,13 @@ def _auto_hot_keys(
         return None
     baseline = float(stats["med"])
     if hist_points is None:
-        hist_points = _manifest_points(spark, cat)
+        hist_points = _manifest_points(
+            checkpoint.partition_summary(
+                checkpoint.read_manifest(spark, cat).where(
+                    ~F.col("partition_id").contains(":")
+                )
+            )
+        )
     hist_med = statistics.median(hist_points) if hist_points else None
     if hist_med is not None:
         nsrc = raw.select("source").distinct().count()
@@ -142,7 +146,7 @@ def run_backfill(
     the wave completes, with the wave's measured wall_ms (per-partition
     measured at the default commit_batch=1; averaged within a wave
     otherwise). A crash mid-invocation therefore loses at most one
-    wave — the rerun's resume anti-join skips everything committed so
+    wave — the rerun's resume set skips everything committed so
     far. At 10^12 scale each input partition is itself a large
     distributed job, so one wave per partition keeps the cluster
     saturated; the sandbox default matches that production shape.
@@ -162,34 +166,28 @@ def run_backfill(
     cat = Catalog(out_root, fmt)
     run_id = checkpoint.new_run_id()
 
-    done = checkpoint.done_partitions(spark, cat)
-    pending = (
-        seq.select("source").distinct()
-        .join(done.withColumnRenamed("partition_id", "source"), "source", "left_anti")
-        .orderBy("source")
-    )
-    part_ids = [r["source"] for r in pending.collect()]
+    # ONE manifest read per invocation: resume set, attempt bases and
+    # the salt="auto" lineage baseline all come from this collect
+    summary = checkpoint.partition_summary(checkpoint.read_manifest(spark, cat))
+    part_ids = [
+        r["source"]
+        for r in seq.select("source").distinct().orderBy("source").collect()
+        if not summary.get(r["source"], {}).get("done")
+    ]
     if max_partitions is not None:
         part_ids = part_ids[:max_partitions]
     if not part_ids:
         return {"run_id": run_id, "partitions": [], "skipped": True}
-
-    attempts = {
-        r["partition_id"]: r["attempt"]
-        for r in checkpoint.read_manifest(spark, cat)
-        .groupBy("partition_id")
-        .agg(F.max("attempt").alias("attempt"))
-        .collect()
-    }
+    attempts = {p: r["attempt"] for p, r in summary.items()}
 
     t_start = time.time()
     n_commits = 0
     done_ids: list[str] = []
     hot_keys_flagged: list[tuple[str, str]] = []
-    # lineage baseline for salt="auto": one manifest scan per
-    # INVOCATION; each wave folds its own measured points_raw in below,
-    # so later waves see earlier waves' commits without re-reading.
-    hist_points = _manifest_points(spark, cat) if salt == "auto" else []
+    # lineage baseline for salt="auto": each wave folds its own
+    # measured points_raw in below, so later waves see earlier waves'
+    # commits without re-reading the manifest.
+    hist_points = _manifest_points(summary) if salt == "auto" else []
     for i in range(0, len(part_ids), max(commit_batch, 1)):
         group = part_ids[i : i + max(commit_batch, 1)]
         t_wave = time.time()
@@ -224,35 +222,35 @@ def run_backfill(
             hot_keys_flagged.extend(
                 (r["source"], r["series_id"]) for r in hot.collect()
             )
-        tier_frames = tiers.build_all_tiers(raw_wave, hot_keys=hot)
-        for tier, name in TIER_NAMES.items():
-            cat.overwrite_partitions(
-                _with_day(tier_frames[tier], "window_start"), name, ["source", "day"]
-            )
+        written = _write_tiers(
+            spark, cat, raw_wave, F.col("source").isin(group), hot
+        )
 
-        # per-partition metrics from the written tables (counts are
-        # cheap: column-pruned scans over just-written partitions);
-        # raw also yields max event time — the watermark carrier
+        # per-partition metrics from the written tables in ONE job:
+        # column-pruned scans of the just-written slices, unioned and
+        # counted per (table, source); raw also yields max event time —
+        # the watermark carrier
+        slices = [
+            raw_wave.select(
+                F.lit("raw").alias("t"), "source",
+                F.unix_micros("event_ts").alias("us"),
+            )
+        ] + [
+            df.select(
+                F.lit(t).alias("t"), "source", F.lit(None).cast("long").alias("us")
+            )
+            for t, df in written.items()
+        ]
         counts: dict[str, dict[str, int]] = {p: {} for p in group}
         for r in (
-            cat.read(spark, "raw")
-            .where(F.col("source").isin(group))
-            .groupBy("source")
-            .agg(
-                F.count("*").alias("points_raw"),
-                F.max(F.unix_micros("event_ts")).alias("max_event_us"),
-            )
+            functools.reduce(DataFrame.unionByName, slices)
+            .groupBy("t", "source")
+            .agg(F.count("*").alias("n"), F.max("us").alias("us"))
             .collect()
         ):
-            counts[r["source"]]["points_raw"] = r["points_raw"]
-            counts[r["source"]]["max_event_us"] = r["max_event_us"]
-        for t, name in TIER_NAMES.items():
-            for r in (
-                cat.read(spark, name)
-                .where(F.col("source").isin(group))
-                .groupBy("source").count().collect()
-            ):
-                counts[r["source"]][f"points_{t}"] = r["count"]
+            counts[r["source"]][f"points_{r['t']}"] = r["n"]
+            if r["t"] == "raw":
+                counts[r["source"]]["max_event_us"] = r["us"]
 
         wave_ms = (time.time() - t_wave) * 1000.0
         rows = [
@@ -292,6 +290,41 @@ def run_backfill(
         "wall_ms": wall_ms,
         "hot_keys": hot_keys_flagged,
     }
+
+
+def _write_tiers(
+    spark: SparkSession,
+    cat: Catalog,
+    raw: DataFrame,
+    sel,
+    hot: DataFrame | None,
+) -> dict[str, DataFrame]:
+    """Write the three tiers of a raw slice as a true cascade: 1m is
+    rolled up from `raw` (salting only the `hot` keys, when given), 1h
+    merges the 1m slice read back from the just-written table, and 1d
+    merges the written 1h slice. Returns the read-back slices by tier.
+
+    `sel` must select whole (source, day) partitions — the backfill
+    wave's sources, the increment's touched (source, day) set — and
+    `raw` must be that slice of the raw table. Every tier window nests
+    inside one day, so each read-back slice holds complete windows and
+    the cascade equals tiers.build_all_tiers over the same raw. Rows
+    are also filtered by `sel` before each write, so no overwrite can
+    reach a partition outside the slice."""
+    frame = (
+        tiers.rollup_salted_hot(raw, "1m", hot_keys=hot)
+        if hot is not None
+        else tiers.rollup(raw, "1m")
+    )
+    written: dict[str, DataFrame] = {}
+    for tier, name in TIER_NAMES.items():
+        if written:
+            frame = tiers.cascade(frame, tier)
+        cat.overwrite_partitions(
+            _with_day(frame, "window_start").where(sel), name, ["source", "day"]
+        )
+        frame = written[tier] = cat.read(spark, name).where(sel)
+    return written
 
 
 def _batch_id_and_count(new_seq: DataFrame) -> tuple[str, int]:
@@ -354,7 +387,9 @@ def run_increment(
     _crash_after_raw: bool = False,
 ) -> dict:
     """Fold an append-only batch of new sequences into raw + all tiers,
-    recomputing only the touched (source, day) tier partitions.
+    recomputing only the touched (source, day) tier partitions: 1m from
+    the touched raw slice, then 1h and 1d each cascaded from the finer
+    tier's just-written slice (_write_tiers).
 
     Retry-idempotent (exactly-once per batch):
     - each batch carries a `batch_id` (caller-supplied — e.g. the
@@ -421,10 +456,7 @@ def run_increment(
         if salt == "auto"
         else None
     )
-    t = tiers.build_all_tiers(raw_touched, hot_keys=hot)
-    for tier, name in TIER_NAMES.items():
-        upd = _with_day(t[tier], "window_start").where(sel)
-        cat.overwrite_partitions(upd, name, ["source", "day"])
+    _write_tiers(spark, cat, raw_touched, sel, hot)
     if n_in < 0:
         n_in = new_seq.count()
     # the batch's max event time rides IN the completion row: the fold

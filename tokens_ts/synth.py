@@ -41,6 +41,11 @@ def sequences(
     source NAME (token recurrence params come from the spec's index in
     the list, so the generator stays deterministic for any naming).
     k_total/n_sources are then ignored.
+
+    parallelism is the TOTAL number of generator partitions, split
+    across sources in proportion to their budgets (each source gets at
+    least one) — not a per-source count. None = 2 × the session's
+    default parallelism. Generated content does not depend on it.
     """
     if specs is None:
         from tokens_ts.registry import default_specs

@@ -1915,10 +1915,12 @@ def ngram_uniqueness(
     cross-doc aggregate view.
 
     Pinned rules: an n-gram is kept iff ALL n positions are non-PAD
-    (PAD breaks adjacency — the bigram_pmi rule generalized); grams
-    are serialized with a ',' join (separator-safe: token ids are
-    integers, so ',' cannot occur inside an element); groups with zero
-    kept n-grams at some n emit no row for that n.
+    (PAD breaks adjacency — the bigram_pmi rule generalized); a gram's
+    key is (n, k1, k2), its int32 tokens packed pairwise into two
+    bigints (k1 = t0<<32 | t1, k2 = t2<<32 | t3, absent positions 0) —
+    injective for n ≤ 4, so max_n > 4 raises ValueError instead of
+    silently colliding 5-grams that share their first four tokens;
+    groups with zero kept n-grams at some n emit no row for that n.
 
     Shapes: the n-gram streams are ROW-LOCAL array expressions flattened
     into one explode; ONE (group, n, gram-key) count agg (map-side
@@ -1934,6 +1936,11 @@ def ngram_uniqueness(
     before/after in OPTIMIZATION_r06.md). At 10^12 scale this op
     rides the per-(source, day) wave bound like every tier job,
     never one corpus-wide agg."""
+    if max_n > 4:
+        raise ValueError(
+            f"ngram_uniqueness: max_n={max_n} > 4; the packed gram key "
+            "holds at most 4 tokens"
+        )
     toks = F.col(tokens_col)
 
     def _pack2(a, b):

@@ -414,9 +414,13 @@ def build_all_tiers(
 ) -> dict[str, DataFrame]:
     """raw → {'1m': ..., '1h': ..., '1d': ...} partial-state frames.
 
-    1h/1d are cascaded from 1m (never recomputed from raw) — this is
-    the incremental path: at 10^12 scale each cascade step reads ~60×
-    less data than the tier below it.
+    The three are lazy frames over one plan: 1h is `cascade` over the
+    1m frame and 1d over the 1h frame, so the values are the cascade's,
+    but each frame evaluated (or written) on its own re-runs the raw →
+    1m aggregation. It is the pure-frame API (query pairs, tests); the
+    write path that cascades from the *written* finer tier — raw
+    aggregated once, each step reading ~60× less data than the tier
+    below it — is pipeline._write_tiers.
 
     hot_keys: optional tiny (source, series_id) frame of keys the
     skew detector flagged — the 1m rollup then fans ONLY those keys
