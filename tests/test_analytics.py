@@ -177,30 +177,53 @@ def test_route_tier_rule():
         tiers.route_tier(90)
 
 
+def _tier_warehouse(spark, seq_tiny, root):
+    from tokens_ts import grid, pipeline
+    from tokens_ts.io.catalog import Catalog
+
+    pipeline.run_backfill(spark, grid.with_event_time(seq_tiny), root)
+    return Catalog(root)
+
+
+def _window_span(spark, cat, res):
+    """[start, end) covering every stored event: start floored to a
+    multiple of `res` (hour-aligned below a day), end EXCLUSIVE by
+    contract — one minute past the last event."""
+    import datetime
+
+    span = (
+        cat.read(spark, "raw")
+        .agg(F.min("event_ts").alias("lo"), F.max("event_ts").alias("hi"))
+        .collect()[0]
+    )
+    start = span["lo"].replace(minute=0, second=0)
+    if res >= 86400:
+        start = start.replace(hour=0)
+    return start, span["hi"] + datetime.timedelta(minutes=1)
+
+
+def _state_by_window(df) -> dict:
+    return {
+        (r["source"], r["series_id"], r["window_start"], c): r[c]
+        for r in df.collect()
+        for c in tiers.STATE_COLS
+    }
+
+
+def _plan(df) -> str:
+    return df._jdf.queryExecution().executedPlan().toString()
+
+
 def test_query_windows_exact_vs_raw(spark, seq_tiny, tmp_path):
     """The routed answer equals rollup_interval straight from raw —
     tier serving loses nothing (algebraic state), while scanning the
-    coarsest exact tier."""
-    from tokens_ts import extract, grid, pipeline
-    from tokens_ts.io.catalog import Catalog
-
-    seq = grid.with_event_time(seq_tiny)
-    root = str(tmp_path / "wh")
-    pipeline.run_backfill(spark, seq, root)
-    cat = Catalog(root)
+    coarsest exact tier. 60/3600/86400 are tier widths (rows served as
+    stored); 900 merges t1m."""
+    cat = _tier_warehouse(spark, seq_tiny, str(tmp_path / "wh"))
     raw = cat.read(spark, "raw").drop("day", "batch_id")
 
-    import datetime
-
-    span = raw.agg(
-        F.min("event_ts").alias("lo"), F.max("event_ts").alias("hi")
-    ).collect()[0]
-    start = span["lo"].replace(minute=0, second=0)
-    # end is EXCLUSIVE by contract: one minute past the last event, so
-    # the final stored window is inside [start, end)
-    end = span["hi"] + datetime.timedelta(minutes=1)
-
-    for res in (900, 3600):
+    for res in (60, 900, 3600, 86400):
+        start, end = _window_span(spark, cat, res)
         got = {
             (r["source"], r["series_id"], r["window_start"]): (
                 r["cnt"], r["sum"], r["mean"],
@@ -226,11 +249,65 @@ def test_query_windows_exact_vs_raw(spark, seq_tiny, tmp_path):
             )
             for r in expect_frame.collect()
         }
+        assert got, res
         assert got.keys() == expect.keys(), res
         for k in got:
             assert got[k][0] == expect[k][0], (res, k)
             for x, y in zip(got[k][1:], expect[k][1:]):
-                assert math.isclose(x, y, rel_tol=1e-12), (res, k)
+                # a window of null values (cnt 0) has null sum and mean
+                assert (x is None and y is None) or math.isclose(
+                    x, y, rel_tol=1e-12
+                ), (res, k)
+
+
+def test_query_windows_tier_width_plans_no_exchange(spark, seq_tiny, tmp_path):
+    """Under UTC a tier-width query finishes the stored rows without a
+    merge: the executed plan has no Exchange. A coarser resolution on
+    the same tier still merges (one Exchange) — the control that the
+    plan probe sees shuffles at all."""
+    cat = _tier_warehouse(spark, seq_tiny, str(tmp_path / "wh"))
+    start, end = _window_span(spark, cat, 86400)
+    for res in (60, 3600, 86400):
+        q = tiers.query_windows(spark, cat, str(start), str(end), res)
+        assert q.count() > 0, res
+        assert "Exchange" not in _plan(q), res
+    merged = tiers.query_windows(spark, cat, str(start), str(end), 900)
+    merged.collect()
+    assert "Exchange" in _plan(merged)
+
+
+def test_query_windows_non_utc_session_keeps_merge(spark, seq_tiny, tmp_path):
+    """Asia/Kolkata (UTC+5:30): tiers written in that session hold
+    local date_trunc windows, which F.window's epoch-aligned buckets
+    do not match — so a tier-width query must still merge, and equals
+    the explicit merge of the stored tier rows."""
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        cat = _tier_warehouse(spark, seq_tiny, str(tmp_path / "wh"))
+        start, end = "2000-01-01", "2100-01-01"  # every stored window
+        for res, name in ((3600, "t1h"), (86400, "t1d")):
+            stored = cat.read(spark, name)
+            # the local windows are off the UTC grid: serving them as
+            # stored would be wrong
+            assert stored.where(F.unix_seconds("window_start") % res != 0).count()
+            expect = (
+                stored.groupBy(
+                    *tiers.KEYS,
+                    F.window("window_start", f"{res} seconds").alias("w"),
+                )
+                .agg(
+                    *[F.sum(c).alias(c) for c in ("cnt", "sum", "sum_sq")],
+                    F.min("min").alias("min"),
+                    F.max("max").alias("max"),
+                )
+                .withColumn("window_start", F.col("w.start"))
+            )
+            got = tiers.query_windows(spark, cat, start, end, res)
+            assert _state_by_window(got) == pytest.approx(
+                _state_by_window(expect), rel=1e-12
+            ), res
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
 
 
 from hypothesis import HealthCheck, given, settings

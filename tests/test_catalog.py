@@ -193,8 +193,8 @@ def test_iceberg_manifest_routing_call_shape(spark):
         def append(self, df, name, partition_cols=None):
             log.append(("append", cat.ident(name)))
 
-        def read(self, sp, name):
-            log.append(("read", cat.ident(name)))
+        def read(self, sp, name, schema=None):
+            log.append(("read", cat.ident(name), schema))
             raise FileNotFoundError("no table yet")
 
     proxy = _CatProxy()
@@ -203,7 +203,8 @@ def test_iceberg_manifest_routing_call_shape(spark):
     )
     empty = checkpoint.read_manifest(spark, proxy)
     assert ("append", "lake.db._lineage") in log
-    assert ("read", "lake.db._lineage") in log
+    # the manifest read declares its schema (parquet skips inference)
+    assert ("read", "lake.db._lineage", checkpoint.MANIFEST_SCHEMA) in log
     assert empty.count() == 0  # unreadable manifest → empty frame, no crash
 
 

@@ -2055,6 +2055,20 @@ def test_ngram_uniqueness_rejects_max_n_above_packed_width(spark):
         textops.ngram_uniqueness(df, max_n=5)
 
 
+def test_ngram_uniqueness_rejects_non_int_tokens(spark):
+    """The packed gram key holds 32-bit ids: bigint tokens wider than
+    that would collide in _pack2 ((1<<32)+1 and 1 share their low
+    half), so a non-int token column is refused up front."""
+    from tokens_ts import textops
+
+    df = spark.createDataFrame(
+        [("A", [(1 << 32) + 1, 2]), ("A", [1, 2])],
+        "source string, tokens array<bigint>",
+    )
+    with pytest.raises(ValueError, match="bigint"):
+        textops.ngram_uniqueness(df, max_n=2)
+
+
 def _mmr_ref(qv, cands, k=3, pool=10):
     """Independent greedy MMR reference on e6-rounded sims, 4x integer
     score, nid-asc ties."""

@@ -5,7 +5,7 @@ import math
 import pyspark.sql.functions as F
 import pytest
 
-from tokens_ts import checkpoint, grid, pipeline
+from tokens_ts import checkpoint, grid, pipeline, tiers
 from tokens_ts.io.catalog import Catalog
 
 
@@ -556,11 +556,13 @@ def test_manifest_compaction_crash_between_append_and_delete(
 def test_increment_manifest_row_carries_watermark(spark, seq_tiny, tmp_path):
     """The fold's completion row IS the watermark advance: its
     max_event_us equals the batch's true max event time (no separate
-    watermark write to lose in a crash)."""
+    watermark write to lose in a crash). The batch spans three sources
+    whose max event times differ, so the maximum is taken over every
+    touched partition, not read off one of them."""
     seq = grid.with_event_time(seq_tiny)
     root = str(tmp_path / "w")
-    pipeline.run_backfill(spark, seq.where(F.col("k") < 300), root)
-    new = seq.where(F.col("k") >= 300)
+    pipeline.run_backfill(spark, seq.where(F.col("k") < 100), root)
+    new = seq.where(F.col("k") >= 100)
     pipeline.run_increment(spark, new, root, batch_id="e1")
     m = checkpoint.read_manifest(spark, str(tmp_path / "w" / "_lineage"))
     row = [r for r in m.collect() if r["partition_id"] == "batch:e1"]
@@ -590,6 +592,86 @@ def test_increment_matches_full_backfill(spark, seq_tiny, tmp_path):
             _tier_snapshot(spark, inc_root, name),
             _tier_snapshot(spark, full_root, name),
         )
+
+
+def test_declared_read_schemas_match_inferred(spark, seq_tiny, tmp_path):
+    """Every schema a read declares is the one Spark infers from the
+    written files, after a backfill and an increment: raw (the written
+    raw frame's schema), the three tiers (TIER_SCHEMA) and the manifest
+    (MANIFEST_SCHEMA). A writer that drifts from its reader fails here
+    instead of reading a column as null."""
+    seq = grid.with_event_time(seq_tiny)
+    root = str(tmp_path / "w")
+    pipeline.run_backfill(spark, seq.where(F.col("k") < 300), root)
+    pipeline.run_increment(spark, seq.where(F.col("k") >= 300), root)
+    cat = Catalog(root)
+    declared = {
+        "raw": pipeline._raw_rows(pipeline.default_extraction, seq, "b").schema,
+        **{name: tiers.TIER_SCHEMA for name in ("t1m", "t1h", "t1d")},
+        "_lineage": checkpoint.MANIFEST_SCHEMA,
+    }
+    for name, schema in declared.items():
+        inferred = [(f.name, f.dataType) for f in cat.read(spark, name).schema]
+        assert sorted(inferred) == sorted(
+            (f.name, f.dataType) for f in schema
+        ), name
+        read = cat.read(spark, name, schema).schema
+        assert [(f.name, f.dataType) for f in read] == inferred, name
+
+
+def test_declared_read_starts_no_job(spark, seq_tiny, tmp_path):
+    """A declared Catalog.read (and read_manifest) plans without a
+    Spark job; the inferred read of the same table runs one — the
+    footer-inference job the declared reads avoid."""
+    seq = grid.with_event_time(seq_tiny)
+    root = str(tmp_path / "w")
+    pipeline.run_backfill(spark, seq.where(F.col("source") == "src00"), root)
+    cat = Catalog(root)
+    raw_schema = pipeline._raw_rows(pipeline.default_extraction, seq, "b").schema
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = "test-declared-read-" + checkpoint.new_run_id()
+    sc.setJobGroup(group, "declared reads")
+    try:
+        cat.read(spark, "raw", raw_schema)
+        cat.read(spark, "t1h", tiers.TIER_SCHEMA)
+        checkpoint.read_manifest(spark, cat)
+        declared_jobs = list(tracker.getJobIdsForGroup(group))
+        cat.read(spark, "t1h")
+        inferred_jobs = list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert declared_jobs == []
+    assert inferred_jobs
+
+
+def test_increment_converges_on_raw_without_batch_id(spark, seq_tiny, tmp_path):
+    """A raw table written before raw rows carried batch_id: the
+    declared raw read fills the column with null, so the upsert keeps
+    those rows, and the increment converges to the state of a
+    warehouse that always had the column."""
+    seq = grid.with_event_time(seq_tiny)
+    old = seq.where(F.col("k") < 300)
+    new = seq.where(F.col("k") >= 300)
+
+    ref_root = str(tmp_path / "ref")
+    pipeline.run_backfill(spark, old, ref_root)
+    pipeline.run_increment(spark, new, ref_root)
+
+    root = str(tmp_path / "legacy")
+    pipeline.run_backfill(spark, old, root)
+    cat = Catalog(root)
+    legacy = cat.read(spark, "raw").drop("batch_id").localCheckpoint(eager=True)
+    legacy.write.mode("overwrite").partitionBy("source", "day").parquet(
+        cat.path("raw")
+    )
+    assert "batch_id" not in cat.read(spark, "raw").columns
+
+    res = pipeline.run_increment(spark, new, root)
+    assert res["touched"] and not res.get("skipped")
+    _same(_raw_snapshot(spark, root), _raw_snapshot(spark, ref_root))
+    for name in ("t1m", "t1h", "t1d"):
+        _same(_tier_snapshot(spark, root, name), _tier_snapshot(spark, ref_root, name))
 
 
 def _raw_snapshot(spark, root):

@@ -92,11 +92,12 @@ def read_manifest(spark: SparkSession, where) -> DataFrame:
     from pyspark.errors import AnalysisException
 
     try:
+        # parquet reads declare MANIFEST_SCHEMA: no footer-inference job,
+        # and columns absent from older files read as null
         if isinstance(where, str):
-            df = spark.read.schema(MANIFEST_SCHEMA).parquet(where)
-        else:
-            df = where.read(spark, MANIFEST_TABLE)
-        return _align_schema(df)
+            return spark.read.schema(MANIFEST_SCHEMA).parquet(where)
+        df = where.read(spark, MANIFEST_TABLE, MANIFEST_SCHEMA)
+        return _align_schema(df) if where.fmt == "iceberg" else df
     except (AnalysisException, FileNotFoundError) as e:
         # classify "missing table" (→ empty frame, first run) vs any
         # other failure (→ re-raise). Primary signal is the structured
@@ -139,10 +140,9 @@ def _local_manifest(spark: SparkSession, rows: list[dict]) -> DataFrame:
 
 
 def _align_schema(df: DataFrame) -> DataFrame:
-    """Project a read manifest onto MANIFEST_SCHEMA: columns added in a
-    later engine version (e.g. max_event_us) read as null from files
-    written before them, instead of failing or silently vanishing when
-    parquet infers the schema from one old file."""
+    """Project an Iceberg manifest onto MANIFEST_SCHEMA: a table created
+    before a column was added (e.g. max_event_us) reads it as null. The
+    parquet reads get the same projection from their declared schema."""
     for f in MANIFEST_SCHEMA.fields:
         if f.name not in df.columns:
             df = df.withColumn(f.name, F.lit(None).cast(f.dataType))

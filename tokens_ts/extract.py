@@ -52,13 +52,6 @@ def arr_sum(arr: Column) -> Column:
     return F.when(arr_cnt(arr) > 0, s)          # empty → null (np.nansum of all-nan)
 
 
-def arr_sum_sq(arr: Column) -> Column:
-    s = F.aggregate(
-        arr, F.lit(0.0), lambda acc, x: acc + F.coalesce(x * x, F.lit(0.0))
-    )
-    return F.when(arr_cnt(arr) > 0, s)
-
-
 def arr_min(arr: Column) -> Column:
     return F.array_min(arr)
 

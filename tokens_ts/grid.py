@@ -24,7 +24,6 @@ from tokens_ts import config as C
 from tokens_ts.registry import (
     SourceSpec,
     default_event_ts,
-    default_ordinal,
     default_specs,
     default_step_col,
     registry_dim,
@@ -38,11 +37,6 @@ def k_from_doc_id(doc_id: Column = None) -> Column:
     registry-independent: every source embeds k the same way."""
     doc_id = F.col("doc_id") if doc_id is None else doc_id
     return F.regexp_extract(doc_id, DOC_K_PATTERN, 1).cast("bigint")
-
-
-def source_ordinal(source: Column = None) -> Column:
-    """Source ordinal under the DEFAULT registry (srcNN names)."""
-    return default_ordinal(source)
 
 
 def step_seconds_col(source: Column = None) -> Column:

@@ -30,6 +30,7 @@ import os
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class Catalog:
@@ -60,9 +61,19 @@ class Catalog:
             f for f in os.listdir(p) if not f.startswith(("_", "."))
         )
 
-    def read(self, spark: SparkSession, name: str) -> DataFrame:
+    def read(
+        self, spark: SparkSession, name: str, schema: StructType | None = None
+    ) -> DataFrame:
+        """Scan a table. With `schema` the parquet fallback reads with
+        that declared schema instead of inferring one from the file
+        footers, which costs a Spark job per read; the declared read
+        starts no job, prunes columns the files carry beyond it and
+        reads its columns missing from older files as null. Iceberg
+        ignores `schema`: the table metadata already carries one."""
         if self.fmt == "iceberg":
             return spark.read.table(self.ident(name))
+        if schema is not None:
+            return spark.read.schema(schema).parquet(self.path(name))
         return spark.read.parquet(self.path(name))
 
     def read_evolved(

@@ -53,6 +53,18 @@ def _with_day(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("day", F.to_date(F.col(ts_col)))
 
 
+def _raw_rows(
+    extraction: Callable[[DataFrame], DataFrame], seq: DataFrame, batch_id: str
+) -> DataFrame:
+    """The raw table's rows for `seq`: extracted points with their day
+    partition and producing batch id (the backfill run id, or the
+    increment's batch id — the key the upsert dedups on). Raw reads
+    declare this frame's schema."""
+    return _with_day(extraction(seq), "event_ts").withColumn(
+        "batch_id", F.lit(batch_id)
+    )
+
+
 def _manifest_points(summary: dict[str, dict]) -> list[float]:
     """points_raw of every committed non-batch partition (latest
     completed attempt) in a checkpoint.partition_summary — the lineage
@@ -199,15 +211,11 @@ def run_backfill(
             for r in checkpoint.token_checksum_by_partition(batch).collect()
         }
 
-        # raw rows carry their producing batch id (the backfill run id
-        # here; increments use theirs) — the key the upsert dedups on
-        raw = _with_day(extraction(batch), "event_ts").withColumn(
-            "batch_id", F.lit(run_id)
-        )
+        raw = _raw_rows(extraction, batch, run_id)
         cat.overwrite_partitions(raw, "raw", ["source", "day"])
 
         raw_wave = (
-            cat.read(spark, "raw")
+            cat.read(spark, "raw", raw.schema)
             .where(F.col("source").isin(group))
             .drop("day", "batch_id")
         )
@@ -323,7 +331,9 @@ def _write_tiers(
         cat.overwrite_partitions(
             _with_day(frame, "window_start").where(sel), name, ["source", "day"]
         )
-        frame = written[tier] = cat.read(spark, name).where(sel)
+        frame = written[tier] = cat.read(
+            spark, name, tiers.TIER_SCHEMA
+        ).where(sel)
     return written
 
 
@@ -355,16 +365,16 @@ def _upsert_raw(spark, cat: Catalog, new_raw: DataFrame, sel, bid: str) -> None:
     Parquet, or first write on either format: (existing rows in the
     touched partitions minus this batch's) ∪ (this batch's rows),
     written with dynamic partition overwrite — same convergence,
-    single-writer only.
+    single-writer only. The existing rows are read with new_raw's
+    schema, so a table written before raw rows carried batch_id reads
+    it as null and keeps those rows.
     """
     if cat.fmt == "iceberg" and cat.exists(spark, "raw"):
         cat.merge_upsert(new_raw, "raw", RAW_MERGE_KEYS)
         return
     upsert = new_raw
     if cat.exists(spark, "raw"):
-        existing = cat.read(spark, "raw")
-        if "batch_id" not in existing.columns:  # pre-increment warehouse
-            existing = existing.withColumn("batch_id", F.lit(None).cast("string"))
+        existing = cat.read(spark, "raw", new_raw.schema)
         keep = (
             existing.where(sel)
             .where(F.col("batch_id").isNull() | (F.col("batch_id") != bid))
@@ -390,6 +400,11 @@ def run_increment(
     recomputing only the touched (source, day) tier partitions: 1m from
     the touched raw slice, then 1h and 1d each cascaded from the finer
     tier's just-written slice (_write_tiers).
+
+    Steady-state job floor: one collect over the cached new raw rows
+    yields both the touched (source, day) set and the batch's max event
+    time, and every table read (manifest gate, raw, tier read-backs)
+    declares its schema, so no read starts a parquet inference job.
 
     Retry-idempotent (exactly-once per batch):
     - each batch carries a `batch_id` (caller-supplied — e.g. the
@@ -427,14 +442,16 @@ def run_increment(
     if checkpoint.is_done(spark, cat, marker):
         return {"touched": [], "batch_id": bid, "skipped": True}
 
-    new_raw = _with_day(extraction(new_seq), "event_ts").withColumn(
-        "batch_id", F.lit(bid)
-    )
+    new_raw = _raw_rows(extraction, new_seq, bid)
     new_raw.cache()
-    touched = [
-        (r["source"], r["day"])
-        for r in new_raw.select("source", "day").distinct().collect()
-    ]
+    # one collect gives the touched partitions and, folded driver-side,
+    # the batch's max event time (the watermark its manifest row carries)
+    parts = (
+        new_raw.groupBy("source", "day")
+        .agg(F.max(F.unix_micros("event_ts")).alias("us"))
+        .collect()
+    )
+    touched = [(r["source"], r["day"]) for r in parts]
     if not touched:
         new_raw.unpersist()
         return {"touched": [], "batch_id": bid}
@@ -447,7 +464,9 @@ def run_increment(
         new_raw.unpersist()
         raise RuntimeError("injected crash after raw write")
 
-    raw_touched = cat.read(spark, "raw").where(sel).drop("day", "batch_id")
+    raw_touched = (
+        cat.read(spark, "raw", new_raw.schema).where(sel).drop("day", "batch_id")
+    )
     # salt="auto": same engine-level skew routing as run_backfill —
     # the touched-window recompute is itself a rollup over possibly
     # skewed keys (a hot source's whole day re-aggregates per batch)
@@ -461,7 +480,7 @@ def run_increment(
         n_in = new_seq.count()
     # the batch's max event time rides IN the completion row: the fold
     # commit and the watermark advance are one atomic manifest append
-    wm = new_raw.agg(F.max(F.unix_micros("event_ts")).alias("m")).collect()[0]["m"]
+    wm = max((r["us"] for r in parts if r["us"] is not None), default=None)
     checkpoint.record_done(
         spark,
         cat,

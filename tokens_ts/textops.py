@@ -12,6 +12,7 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import IntegerType
 
 def _words():
     # built lazily: Column construction needs an active SparkContext
@@ -1919,7 +1920,9 @@ def ngram_uniqueness(
     key is (n, k1, k2), its int32 tokens packed pairwise into two
     bigints (k1 = t0<<32 | t1, k2 = t2<<32 | t3, absent positions 0) —
     injective for n ≤ 4, so max_n > 4 raises ValueError instead of
-    silently colliding 5-grams that share their first four tokens;
+    silently colliding 5-grams that share their first four tokens, and
+    so does a token column whose elements are not int (wider ids would
+    collide in the 32-bit halves);
     groups with zero kept n-grams at some n emit no row for that n.
 
     Shapes: the n-gram streams are ROW-LOCAL array expressions flattened
@@ -1940,6 +1943,12 @@ def ngram_uniqueness(
         raise ValueError(
             f"ngram_uniqueness: max_n={max_n} > 4; the packed gram key "
             "holds at most 4 tokens"
+        )
+    elem = seq.schema[tokens_col].dataType.elementType
+    if not isinstance(elem, IntegerType):
+        raise ValueError(
+            f"ngram_uniqueness: {tokens_col} holds {elem.simpleString()} "
+            "tokens; the packed gram key needs int (32-bit) ids"
         )
     toks = F.col(tokens_col)
 

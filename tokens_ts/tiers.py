@@ -30,11 +30,37 @@ from collections.abc import Sequence
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
+from pyspark.sql.types import (
+    DateType,
+    DoubleType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+    TimestampType,
+)
 
 from tokens_ts import config as C
 
 KEYS = ["source", "series_id"]
 STATE_COLS = ["cnt", "sum", "min", "max", "sum_sq"]
+
+# A stored tier table as a read sees it: data columns, then the
+# (source, day) partition columns. Declared reads use it to skip
+# parquet schema inference.
+TIER_SCHEMA = StructType(
+    [
+        StructField("series_id", StringType()),
+        StructField("window_start", TimestampType()),
+        StructField("cnt", LongType()),
+        StructField("sum", DoubleType()),
+        StructField("min", DoubleType()),
+        StructField("max", DoubleType()),
+        StructField("sum_sq", DoubleType()),
+        StructField("source", StringType()),
+        StructField("day", DateType()),
+    ]
+)
 
 
 def _trunc(tier: str):
@@ -523,6 +549,7 @@ def enforce_retention(
 
 
 _TIER_WIDTH_S = {"1m": 60, "1h": 3600, "1d": 86400}
+_UTC_ZONES = frozenset({"UTC", "Etc/UTC", "GMT", "Etc/GMT"})
 
 
 def route_tier(resolution_s: int) -> str:
@@ -553,14 +580,22 @@ def query_windows(
 ) -> DataFrame:
     """Serve a windowed-stats query from the CHEAPEST tier (the reason
     the tier store exists): route_tier picks the coarsest exact tier,
-    the scan filters window_start ∈ [start, end) — with `day` in the
-    predicate so (source, day) partition pruning kicks in — and the
-    stored partial states cascade-merge to the requested resolution,
-    finished to mean/std. Result is EXACTLY what rollup_interval over
-    raw would produce (algebraic state; pinned by pytest), at a scan
-    cost of resolution/tier-width fewer rows than raw."""
+    the scan (declared TIER_SCHEMA, no inference job) filters
+    window_start ∈ [start, end) — with `day` in the predicate so
+    (source, day) partition pruning kicks in — and the stored partial
+    states cascade-merge to the requested resolution, finished to
+    mean/std. Result is EXACTLY what rollup_interval over raw would
+    produce (algebraic state; pinned by pytest), at a scan cost of
+    resolution/tier-width fewer rows than raw.
+
+    At the tier's own width under a UTC session every stored row is
+    already one output window (date_trunc and the epoch-aligned
+    F.window agree in UTC), so the rows are finished as stored: no
+    merge and no shuffle. Any other session time zone keeps the merge,
+    since its date_trunc windows are local and need not line up with
+    F.window."""
     tier = route_tier(resolution_s)
-    t = cat.read(spark, TIER_NAME_BY_WIDTH[tier])
+    t = cat.read(spark, TIER_NAME_BY_WIDTH[tier], TIER_SCHEMA)
     lo, hi = F.lit(start).cast("timestamp"), F.lit(end).cast("timestamp")
     scan = t.where(
         (F.col("window_start") >= lo)
@@ -570,6 +605,11 @@ def query_windows(
         & (F.col("day") >= F.to_date(lo))
         & (F.col("day") <= F.to_date(hi))
     )
+    if (
+        resolution_s == _TIER_WIDTH_S[tier]
+        and spark.conf.get("spark.sql.session.timeZone") in _UTC_ZONES
+    ):
+        return finish(scan.select(*KEYS, "window_start", *STATE_COLS))
     merged = (
         scan.groupBy(
             *KEYS,
