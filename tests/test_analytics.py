@@ -809,6 +809,55 @@ def test_cusum_constant_series_never_alarms(spark):
     assert all(r["s_up"] == 0.0 and r["s_dn"] == 0.0 for r in out)
 
 
+def test_cusum_one_bucket_key_is_flat(spark):
+    """A key with a single bucket has σ=0 → z=0, both sides stay 0 and
+    never alarm, next to a multi-bucket key in the same frame."""
+    from datetime import datetime, timedelta
+
+    from tokens_ts import analytics
+
+    t0 = datetime(2026, 1, 1)
+    rows = [("S", t0 + timedelta(hours=h), float(h * h)) for h in range(6)]
+    rows += [("O", t0, 3.0), ("O", t0 + timedelta(minutes=5), 9.0)]
+    df = spark.createDataFrame(rows, "k string, event_ts timestamp, value double")
+    out = analytics.cusum(df, keys=["k"], threshold=0.1).collect()
+    (one,) = [r for r in out if r["k"] == "O"]
+    assert one["v"] == 6.0
+    assert (one["z"], one["s_up"], one["s_dn"], one["alarm"]) == (0.0, 0.0, 0.0, False)
+    assert any(r["alarm"] for r in out if r["k"] == "S")
+
+
+def test_pair_operators_leave_no_persisted_rdds(spark):
+    """bigram_pmi_topk, kendall_matrix and cusum leave the session's
+    storage status as they found it: a collected call persists no RDD."""
+    from datetime import datetime, timedelta
+
+    from tokens_ts import analytics, textops
+
+    t0 = datetime(2026, 1, 1)
+    ev = spark.createDataFrame(
+        [
+            (k, t0 + timedelta(hours=h), float((h * (i + 2)) % 7))
+            for i, k in enumerate("ABC")
+            for h in range(30)
+        ],
+        "k string, event_ts timestamp, value double",
+    )
+    seq = spark.createDataFrame(
+        [(f"d{i}", [1, 2, 3, 0, 3, 1, 2]) for i in range(8)],
+        "doc_id string, tokens array<int>",
+    )
+    jsc = spark.sparkContext._jsc
+    for call in (
+        lambda: textops.bigram_pmi_topk(seq, min_count=2),
+        lambda: analytics.kendall_matrix(ev, keys=["k"]),
+        lambda: analytics.cusum(ev, keys=["k"]),
+    ):
+        before = jsc.getPersistentRDDs().size()
+        assert call().collect()
+        assert jsc.getPersistentRDDs().size() == before
+
+
 def test_robust_zscore_known_values(spark):
     """[1,2,3,4,100]: med=3, MAD=1 → rz(100)=97/1.4826≈65.4 (outlier),
     rz(1)≈−1.35 (not). A ≥50%-constant key has MAD=0 → null rz."""
@@ -1819,6 +1868,18 @@ def test_kendall_matrix_constant_side_null_and_day_split(spark):
     assert days == {"2026-01-01"}  # single-bucket day emits nothing
     r = out[0]
     assert r["tau_b"] is None and r["ty"] == 3
+
+
+def test_kendall_matrix_single_series_no_rows(spark):
+    """One series has no partner: no pair rows, no error."""
+    from datetime import datetime, timedelta
+
+    from tokens_ts import analytics
+
+    t0 = datetime(2026, 1, 1)
+    rows = [("A", t0 + timedelta(hours=h), float(h)) for h in range(5)]
+    df = spark.createDataFrame(rows, "k string, event_ts timestamp, value double")
+    assert analytics.kendall_matrix(df, keys=["k"]).collect() == []
 
 
 def test_ar1_half_life_exact_decay(spark):

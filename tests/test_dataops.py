@@ -750,6 +750,21 @@ def test_bigram_pmi_collocation_beats_chance(spark):
     assert pmis == sorted(pmis, reverse=True)
 
 
+def test_bigram_pmi_degenerate_inputs_empty(spark):
+    """No bigram survives an empty frame, all-PAD sequences or
+    sequences shorter than 2: each returns an empty frame, no error."""
+    from tokens_ts import textops
+
+    schema = "doc_id string, tokens array<int>"
+    for rows in (
+        [],
+        [("d0", [0, 0, 0]), ("d1", [0])],
+        [("d0", [7]), ("d1", []), ("d2", None)],
+    ):
+        df = spark.createDataFrame(rows, schema)
+        assert textops.bigram_pmi_topk(df, min_count=1).collect() == []
+
+
 def test_dist_drift_known_histograms(spark):
     import math
     from datetime import datetime

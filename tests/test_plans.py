@@ -414,19 +414,47 @@ def test_holt_single_key_shuffle(spark, events_path):
     assert "hashpartitioning(event_type" in plan
 
 
-def test_cusum_no_python_and_broadcast_stats(spark, events_path):
+def test_cusum_no_python_no_join_window_stats(spark, events_path):
     """CUSUM via the reflection identity stays pure Catalyst: no
-    Arrow/Python stage anywhere, the per-key stats join back is a
-    BroadcastHashJoin, and both cumulative passes run as RunningWindow
-    frames over hashpartitioning on the key — never SinglePartition."""
+    Arrow/Python stage anywhere and no join — the per-key mean/σ are
+    a Window over the same hashpartitioning on the key that the two
+    cumulative RunningWindow passes use — never SinglePartition."""
+    import re
+
     from tokens_ts import analytics
 
     ev = spark.read.parquet(events_path + "/events.parquet")
     plan = _plan(analytics.cusum(ev, ["event_type"], ts_col="ts"))
     assert "FlatMapGroupsInPandas" not in plan, plan
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
-    assert "BroadcastHashJoin" in plan, plan
+    assert "Join" not in plan, plan
+    assert re.search(
+        r"Window \[avg\(v#\d+\) windowspecdefinition\(event_type#\d+, "
+        r"specifiedwindowframe", plan
+    ), plan
+    assert re.search(r"Exchange hashpartitioning\(event_type#\d+, \d+\)", plan), plan
     assert "SinglePartition" not in plan, plan
+
+
+def test_bigram_pmi_no_cache_one_totals_join(spark, seq_path):
+    """bigram_pmi_topk leaves caching to exchange reuse (no
+    InMemoryTableScan) and fetches both totals from ONE keyless agg:
+    exactly one BroadcastNestedLoopJoin."""
+    from tokens_ts import textops
+
+    plan = _plan(textops.bigram_pmi_topk(spark.read.parquet(seq_path)))
+    assert "InMemoryTableScan" not in plan, plan
+    assert plan.count("BroadcastNestedLoopJoin") == 1, plan
+
+
+def test_kendall_matrix_no_cache(spark, events_path):
+    """kendall_matrix's bucket agg and alignment join each feed two
+    sides through exchange reuse, not a cache."""
+    from tokens_ts import analytics
+
+    ev = spark.read.parquet(events_path + "/events.parquet")
+    plan = _plan(analytics.kendall_matrix(ev, ["event_type"], ts_col="ts"))
+    assert "InMemoryTableScan" not in plan, plan
 
 
 def test_robust_zscore_broadcast_joins_only(spark, events_path):

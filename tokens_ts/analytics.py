@@ -917,7 +917,8 @@ def cusum(
     as two O(n) cumulative window passes — pure Catalyst, whole-stage
     codegen, one shuffle on the key, and the identical shape in the
     SQL oracle. a⁺_t = z_t − slack, a⁻_t = −z_t − slack with
-    z standardized against the key's own bucket mean/σ (σ=0 or a
+    z standardized against the key's own bucket mean/σ, window
+    aggregates on that same key shuffle (no stats join; σ=0 or a
     1-bucket series → z=0). slack=0.5 and threshold=4 are
     binary-exact doubles. Alarm = either side exceeds threshold."""
     b = (
@@ -928,10 +929,10 @@ def cusum(
         )
         .agg(F.avg(value_col).alias("v"))
     )
-    stats = b.groupBy(*keys).agg(
-        F.avg("v").alias("_mu"), F.stddev_pop("v").alias("_sd")
-    )
-    z = b.join(F.broadcast(stats), keys).withColumn(
+    kw = Window.partitionBy(*keys)
+    z = b.withColumns(
+        {"_mu": F.avg("v").over(kw), "_sd": F.stddev_pop("v").over(kw)}
+    ).withColumn(
         "z",
         F.when(
             F.col("_sd") > 0, (F.col("v") - F.col("_mu")) / F.col("_sd")
@@ -2501,14 +2502,13 @@ def kendall_matrix(
             .cast("bigint")
             .alias("v")
         )
-    ).cache()
+    )
     kid = F.concat_ws("", *keys)
     a = b.select(kid.alias("ka"), "day", "ep", F.col("v").alias("x"))
     bb = b.select(kid.alias("kb"), "day", "ep", F.col("v").alias("y"))
-    # b backs both alignment sides and j both pair sides: cache the
-    # buckets-bounded frames so the corpus bucket agg runs once and
-    # the alignment join once (r6 single-scan rule)
-    j = a.join(bb, ["day", "ep"]).where(F.col("ka") < F.col("kb")).cache()
+    # b backs both alignment sides and j both pair sides; exchange
+    # reuse runs each one's shuffle once, so no cache is needed
+    j = a.join(bb, ["day", "ep"]).where(F.col("ka") < F.col("kb"))
     j1 = j.select(
         "ka", "kb", "day",
         F.col("ep").alias("ep1"), F.col("x").alias("x1"), F.col("y").alias("y1"),

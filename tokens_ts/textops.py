@@ -559,7 +559,7 @@ def bigram_pmi_topk(
     ties broken (a ASC, b ASC). Shapes: the bigram stream is built
     row-locally (transform over 0..n−2, no posexplode self-join);
     unigram and bigram count frames are vocab-/vocab²-bounded; the
-    two totals ride as broadcast 1-row frames; top-k plans as
+    two totals ride as one broadcast 1-row frame; top-k plans as
     TakeOrderedAndProject — no global sort, no corpus-sized join."""
     toks = F.col(tokens_col)
     pairs = seq.select(
@@ -578,29 +578,28 @@ def bigram_pmi_topk(
         (F.col("a") != pad_id) & (F.col("b") != pad_id)
     )
     # the unigram frame feeds three subtrees (both join dims + the
-    # total) and the bigram stream two (total-before-filter + the
-    # support-filtered counts): cache the vocab-/vocab²-bounded count
-    # frames so the corpus is exploded once per stream instead of
-    # five times via Catalyst re-derivation (r6 single-scan rule)
+    # totals) and the bigram stream two (totals + the support-filtered
+    # counts); exchange reuse plans each count frame's shuffle once,
+    # so the corpus is exploded once per stream without a cache
     uni = (
         seq.select(F.explode(tokens_col).alias("t"))
         .where(F.col("t") != pad_id)
         .groupBy("t")
         .agg(F.count("*").alias("c"))
-    ).cache()
-    t_uni = uni.agg(F.sum("c").cast("double").alias("tu"))
-    bgc_all = pairs.groupBy("a", "b").agg(F.count("*").alias("cnt")).cache()
-    # T_bi is counted BEFORE the min_count filter (pinned rule):
-    # sum of per-bigram counts == count of the pair stream
-    t_bi = bgc_all.agg(F.sum("cnt").cast("double").alias("tb"))
+    )
+    bgc_all = pairs.groupBy("a", "b").agg(F.count("*").alias("cnt"))
+    # one keyless agg for both totals; T_bi is counted BEFORE the
+    # min_count filter (pinned rule) = the pair stream's length
+    totals = uni.select(F.col("c").alias("tu")).unionByName(
+        bgc_all.select(F.col("cnt").alias("tb")), allowMissingColumns=True
+    ).agg(*(F.sum(c).cast("double").alias(c) for c in ("tu", "tb")))
     bgc = bgc_all.where(F.col("cnt") >= min_count)
     ua = uni.select(F.col("t").alias("a"), F.col("c").alias("ca"))
     ub = uni.select(F.col("t").alias("b"), F.col("c").alias("cb"))
     scored = (
         bgc.join(F.broadcast(ua), "a")
         .join(F.broadcast(ub), "b")
-        .crossJoin(F.broadcast(t_bi))
-        .crossJoin(F.broadcast(t_uni))
+        .crossJoin(F.broadcast(totals))
         .withColumn(
             "pmi_e6",
             F.round(
