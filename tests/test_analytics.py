@@ -4773,6 +4773,25 @@ def test_attribution_linear_tie_break_and_remainder(spark):
     assert r["n_first"] == 1 and r["n_last"] == 1
 
 
+def test_attribution_linear_first_and_last_touch_hours_differ(spark):
+    """W = 2h: clicks at 1000s (hour 0) and 4000s and 4000s (hour 1)
+    before a purchase at 5000s. First touch lands in hour 0, last touch
+    in hour 1 — the tie at 4000s resolves to the larger event_id,
+    exactly one last touch."""
+    rows = [
+        (1, "a", "click", 1000), (1, "b", "click", 4000),
+        (1, "c", "click", 4000), (1, "p", "purchase", 5000),
+    ]
+    df = spark.createDataFrame(
+        rows, "user_id long, event_id string, event_type string, t long"
+    ).select("user_id", "event_id", "event_type",
+             F.timestamp_seconds("t").alias("ts"))
+    out = {r["touch_hour_ep"]: r for r in
+           analytics.attribution_linear(df, window_s=7200).collect()}
+    assert (out[0]["n_touch"], out[0]["n_first"], out[0]["n_last"]) == (1, 1, 0)
+    assert (out[3600]["n_touch"], out[3600]["n_first"], out[3600]["n_last"]) == (2, 0, 1)
+
+
 # ---------------------------------------------------------------------------
 # autoperiod: smallest strict local ACF peak
 # ---------------------------------------------------------------------------

@@ -798,6 +798,32 @@ def test_dist_drift_known_histograms(spark):
     assert 0.0 < r["jsd"] < math.log(2.0)
 
 
+def test_dist_drift_served_counts_not_cached(spark):
+    """The counts= path takes the same double-emit explode as the
+    corpus path: it equals the direct call and never caches the
+    caller's frame."""
+    from datetime import datetime
+
+    from tokens_ts import textops
+
+    rows = [
+        ("s0", datetime(2026, 1, 1, 0, 10), [1, 1, 2, 2]),
+        ("s0", datetime(2026, 1, 1, 1, 20), [1, 1, 1, 3, 0]),
+        ("s1", datetime(2026, 1, 1, 1, 5), [4]),
+        ("s1", datetime(2026, 1, 1, 2, 5), [4, 5]),
+    ]
+    df = spark.createDataFrame(
+        rows, "source string, event_ts timestamp, tokens array<int>"
+    )
+    tier = textops.token_histogram(df)
+    served = textops.dist_drift(None, counts=tier).collect()
+    assert not tier.is_cached
+    assert sorted(map(tuple, served)) == sorted(
+        map(tuple, textops.dist_drift(df).collect())
+    )
+    assert len(served) == 2
+
+
 def test_vocab_growth_curve(spark):
     from datetime import datetime
 

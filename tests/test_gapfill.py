@@ -133,6 +133,81 @@ def test_gapfill_bucketed_windows_are_bucket_partitioned(spark, raw):
     assert row_level and all("_bkt" in s for s in row_level)
 
 
+def _final_plan(df) -> str:
+    """The executed AQE plan's final section (without the initial one)."""
+    df.collect()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "isFinalPlan=true" in plan
+    return plan.split("== Initial Plan ==")[0]
+
+
+def test_interp_one_sort_one_window(spark, raw):
+    """Look-ahead (lead … IGNORE NULLS) and look-behind (cumulative
+    last) read the same ascending order: with_interp plans exactly one
+    Sort and one Window, and the ffill+interp gapfill one Sort."""
+    import re
+
+    g = grid.full_grid(spark, k_total=400, n_sources=4)
+    plan = _final_plan(gapfill.with_interp(gapfill.align(g, raw)))
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+    assert len(re.findall(r"\bWindow \[", plan)) == 1, plan
+    plan = _final_plan(gapfill.gapfill(g, raw))
+    assert len(re.findall(r"\bSort \[", plan)) == 1, plan
+
+
+def test_gapfill_bucketed_no_descending_window(spark, raw):
+    """The bucketed local pass and the spine carry take their
+    look-ahead from ascending order: no window spec orders DESC."""
+    g = grid.full_grid(spark, k_total=400, n_sources=4)
+    plan = gapfill.gapfill_bucketed(g, raw, bucket="1h")._jdf.queryExecution().executedPlan().toString()
+    specs = [seg.split(")")[0] for seg in plan.split("windowspecdefinition(")[1:]]
+    assert specs, "plan must contain window specs"
+    assert not [s for s in specs if "DESC" in s], specs
+
+
+def test_interp_hand_runs_and_quoted_value_col(spark):
+    """Hand-worked look-ahead over 20-minute slots, observed values i²
+    at slots 1, 5, 13 and 16 (so a wrong neighbour changes the answer):
+    a leading null (no extrapolation), an interior run of 3, a run of
+    7 that spans two all-null 1h buckets, an observed NaN (not null:
+    an endpoint, so the slot after it is NaN too) and a trailing null.
+    The value column name needs backtick quoting in the lead
+    expression. bucketed_fill over 1h buckets (three slots each) gives
+    the same interp, with the look-ahead both inside a bucket and
+    through the spine carry."""
+    import datetime as dt
+
+    t0 = dt.datetime(2024, 1, 1)
+    nan = float("nan")
+    vals = [None] * 18
+    for i in (1, 5, 13, 16):
+        vals[i] = float(i * i)
+    vals[14] = nan
+    rows = [("s", "a", t0 + dt.timedelta(minutes=20 * i), v) for i, v in enumerate(vals)]
+    df = spark.createDataFrame(
+        rows, "source string, series_id string, event_ts timestamp, `obs value` double"
+    )
+    want = (
+        [None, 1.0, 7.0, 13.0, 19.0, 25.0]
+        + [25.0 + 18.0 * k for k in range(1, 8)]
+        + [169.0, nan, nan, 256.0, None]
+    )
+    got = {
+        r["event_ts"]: r["interp"]
+        for r in gapfill.with_interp(df, value_col="obs value").collect()
+    }
+    bkt = {
+        r["event_ts"]: r["interp"]
+        for r in gapfill.bucketed_fill(
+            df.withColumnRenamed("obs value", "value"), bucket="1h"
+        ).collect()
+    }
+    for i, w in enumerate(want):
+        t = t0 + dt.timedelta(minutes=20 * i)
+        assert _nan_eq(got[t], w), (i, got[t], w)
+        assert _nan_eq(bkt[t], w), (i, bkt[t], w)
+
+
 def test_interval_join_semantics(spark):
     """Half-open [start, end): boundary exclusivity, multi-interval
     overlap, empty interval, and unaligned boundaries vs the bucket."""

@@ -457,6 +457,20 @@ def test_kendall_matrix_no_cache(spark, events_path):
     assert "InMemoryTableScan" not in plan, plan
 
 
+def test_attribution_linear_no_descending_window(spark, events_path):
+    """Last touch is row_number == count over the first-touch order,
+    so no window orders DESC (one sort fewer than a descending spec)."""
+    from tokens_ts import analytics
+
+    ev = spark.read.parquet(events_path + "/events.parquet")
+    plan = _plan(
+        analytics.attribution_linear(ev, touch_type="type00", conv_type="type01")
+    )
+    specs = [seg.split(")")[0] for seg in plan.split("windowspecdefinition(")[1:]]
+    assert specs, plan
+    assert not [s for s in specs if "DESC" in s], specs
+
+
 def test_robust_zscore_broadcast_joins_only(spark, events_path):
     """Both median/MAD frames join back broadcast — the fact side is
     never shuffled for a join (only the two keys-bounded aggs

@@ -358,8 +358,9 @@ def with_level_shift(
 
     Both frames are bounded ROWS frames (W−1 preceding / W
     following), which Spark evaluates with an O(n) sliding buffer —
-    this is deliberately NOT the unbounded-following frame whose
-    per-row rescan is O(n²) (see gapfill.py bfill note)."""
+    this is deliberately NOT an unbounded-following frame, which Spark
+    evaluates by recomputing the aggregate for every row — O(n²) per
+    series."""
     w = Window.partitionBy(*keys).orderBy(ts_col, *(order_cols or []))
     trail = w.rowsBetween(-(width - 1), 0)
     lead_f = w.rowsBetween(1, width)
@@ -8083,14 +8084,13 @@ def attribution_linear(
     )
     wc = Window.partitionBy("_cid")
     wfirst = wc.orderBy(F.asc("_tc"), F.asc("_tid"))
-    wlast = wc.orderBy(F.desc("_tc"), F.desc("_tid"))
+    k = F.count("*").over(wc)
+    rn = F.row_number().over(wfirst)
     scored = m.select(
         "_tc",
-        F.round(F.lit(1e6) / F.count("*").over(wc)).cast("bigint").alias(
-            "_credit"
-        ),
-        (F.row_number().over(wfirst) == 1).cast("bigint").alias("_is_first"),
-        (F.row_number().over(wlast) == 1).cast("bigint").alias("_is_last"),
+        F.round(F.lit(1e6) / k).cast("bigint").alias("_credit"),
+        (rn == 1).cast("bigint").alias("_is_first"),
+        (rn == k).cast("bigint").alias("_is_last"),
     )
     return (
         scored.groupBy(

@@ -47,26 +47,28 @@ def align(
     return slots.join(raw, ["source", "series_id", "event_ts"], "left")
 
 
+def _w_series():
+    return Window.partitionBy("source", "series_id").orderBy("event_ts")
+
+
 def _w_prev():
-    return (
-        Window.partitionBy("source", "series_id")
-        .orderBy("event_ts")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    return _w_series().rowsBetween(Window.unboundedPreceding, 0)
 
 
-def _w_next():
-    """Backward-fill window: DESCENDING order with an unbounded-
-    PRECEDING frame. Semantically identical to ascending order with
-    rowsBetween(0, unboundedFollowing), but Spark evaluates unbounded-
-    following frames by recomputing the aggregate for every row —
-    O(n²) per series (480 s vs 2 s on a 216k-slot grid) — while
-    cumulative unbounded-preceding frames are incremental O(n)."""
-    return (
-        Window.partitionBy("source", "series_id")
-        .orderBy(F.desc("event_ts"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+def _lead_nn(sql: str, w):
+    """`lead(sql) IGNORE NULLS` over `w`: the next non-null value
+    strictly after each row (PySpark's F.lead has no ignoreNulls)."""
+    return F.expr(f"lead({sql}) IGNORE NULLS").over(w)
+
+
+def _next_obs(value_col: str, w):
+    """(value, epoch seconds) of the next observation after each row,
+    read with lead over the SAME ascending order the look-behind uses —
+    one sort serves both sides. (An unbounded-following frame would
+    rescan per row, O(n²).)"""
+    v = f"`{value_col}`"
+    t = f"CASE WHEN {v} IS NOT NULL THEN CAST(event_ts AS DOUBLE) END"
+    return _lead_nn(v, w), _lead_nn(t, w)
 
 
 def with_ffill(
@@ -83,10 +85,7 @@ def with_ffill(
     filled = F.last(value_col, ignorenulls=True).over(_w_prev())
     if limit is None:
         return aligned.withColumn("ffill", filled)
-    rn = F.row_number().over(
-        Window.partitionBy("source", "series_id").orderBy("event_ts")
-    )
-    aligned = aligned.withColumn("_rn", rn)
+    aligned = aligned.withColumn("_rn", F.row_number().over(_w_series()))
     obs_rn = F.last(
         F.when(F.col(value_col).isNotNull(), F.col("_rn")), ignorenulls=True
     ).over(_w_prev())
@@ -107,8 +106,7 @@ def with_interp(aligned: DataFrame, value_col: str = "value") -> DataFrame:
     ts = F.col("event_ts").cast("double")
     prev_v = F.last(v, ignorenulls=True).over(_w_prev())
     prev_t = F.last(F.when(v.isNotNull(), ts), ignorenulls=True).over(_w_prev())
-    next_v = F.last(v, ignorenulls=True).over(_w_next())
-    next_t = F.last(F.when(v.isNotNull(), ts), ignorenulls=True).over(_w_next())
+    next_v, next_t = _next_obs(value_col, _w_series())
     interp = (
         F.when(v.isNotNull(), v)
         .when(
@@ -121,7 +119,8 @@ def with_interp(aligned: DataFrame, value_col: str = "value") -> DataFrame:
 
 
 def gapfill(grid: DataFrame, raw: DataFrame) -> DataFrame:
-    """align + ffill + interp in one pass (shares the two window specs)."""
+    """align + ffill + interp in one pass (one sort: every fill window
+    shares the ascending (source, series_id) event-time order)."""
     return with_interp(with_ffill(align(grid, raw)))
 
 
@@ -133,8 +132,9 @@ def gapfill_bucketed(grid: DataFrame, raw: DataFrame, bucket: str = "1d") -> Dat
     buffer. This variant range-buckets the series by time and keeps
     every window partitioned by (source, series_id, bucket):
 
-      1. local pass: cumulative prev/next non-null (value, ts) within
-         each bucket — bounded sorts;
+      1. local pass: prev (cumulative last) and next (lead … IGNORE
+         NULLS) non-null (value, ts) within each bucket — one bounded
+         ascending sort;
       2. bucket spine: one row per (series, bucket) with its first/
          last non-null observation (an aggregate, not a sort);
       3. carry pass: windows over the SPINE (rows = #buckets, tiny)
@@ -163,20 +163,15 @@ def bucketed_fill(aligned: DataFrame, bucket: str = "1d") -> DataFrame:
     ts = F.col("event_ts").cast("double")
     aligned = aligned.withColumn("_bkt", F.date_trunc(trunc, "event_ts"))
 
-    def _w(desc: bool):
-        order = F.desc("event_ts") if desc else F.asc("event_ts")
-        return (
-            Window.partitionBy("source", "series_id", "_bkt")
-            .orderBy(order)
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-
+    w = Window.partitionBy("source", "series_id", "_bkt").orderBy("event_ts")
+    wp = w.rowsBetween(Window.unboundedPreceding, 0)
+    lnv, lnt = _next_obs("value", w)
     loc = aligned.select(
         "*",
-        F.last(v, ignorenulls=True).over(_w(False)).alias("_lpv"),
-        F.last(F.when(v.isNotNull(), ts), ignorenulls=True).over(_w(False)).alias("_lpt"),
-        F.last(v, ignorenulls=True).over(_w(True)).alias("_lnv"),
-        F.last(F.when(v.isNotNull(), ts), ignorenulls=True).over(_w(True)).alias("_lnt"),
+        F.last(v, ignorenulls=True).over(wp).alias("_lpv"),
+        F.last(F.when(v.isNotNull(), ts), ignorenulls=True).over(wp).alias("_lpt"),
+        lnv.alias("_lnv"),
+        lnt.alias("_lnt"),
     )
 
     # spine: every bucket of every series (including all-null buckets —
@@ -187,24 +182,16 @@ def bucketed_fill(aligned: DataFrame, bucket: str = "1d") -> DataFrame:
         F.min_by(v, F.when(v.isNotNull(), ts)).alias("_bf_v"),
         F.min(F.when(v.isNotNull(), ts)).alias("_bf_t"),
     )
-    wbp = (
-        Window.partitionBy("source", "series_id")
-        .orderBy("_bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    wbn = (
-        Window.partitionBy("source", "series_id")
-        .orderBy(F.desc("_bkt"))
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
+    wb = Window.partitionBy("source", "series_id").orderBy("_bkt")
+    wbp = wb.rowsBetween(Window.unboundedPreceding, -1)
     carries = spine.select(
         "source",
         "series_id",
         "_bkt",
         F.last("_bl_v", ignorenulls=True).over(wbp).alias("_cpv"),
         F.last("_bl_t", ignorenulls=True).over(wbp).alias("_cpt"),
-        F.last("_bf_v", ignorenulls=True).over(wbn).alias("_cnv"),
-        F.last("_bf_t", ignorenulls=True).over(wbn).alias("_cnt"),
+        _lead_nn("_bf_v", wb).alias("_cnv"),
+        _lead_nn("_bf_t", wb).alias("_cnt"),
     )
 
     # no broadcast hint: the spine is one row per (series, bucket) —

@@ -582,22 +582,7 @@ def read_token_tier_asof(
     The committed-batch set is manifest-sized (control plane), so the
     filter is a broadcast semi-join; the re-sum is the same bounded
     agg as read_token_tier."""
-    cat = Catalog(out_root, fmt)
-    m = checkpoint.read_manifest(spark, cat).where(
-        (F.col("status") == "done")
-        & F.col("partition_id").startswith("tok:")
-    )
-    if asof_ts is not None:
-        m = m.where(F.col("ts") <= F.lit(float(asof_ts)))
-    committed = m.select(
-        F.expr("substring(partition_id, 5)").alias("batch_id")
-    ).distinct()
-    return (
-        cat.read(spark, "tok_hist")
-        .join(F.broadcast(committed), "batch_id", "left_semi")
-        .groupBy(by, "ep", "t")
-        .agg(F.sum("c").alias("c"))
-    )
+    return _read_committed_tokens(spark, out_root, fmt, by, None, asof_ts)
 
 
 def read_token_tier_changes(
@@ -620,12 +605,28 @@ def read_token_tier_changes(
     here for the same reason they are in read_token_tier_asof: the
     manifest defines table state, data files never do. Same broadcast
     semi-join + bounded re-sum shape as the snapshot read."""
+    return _read_committed_tokens(spark, out_root, fmt, by, since_ts, until_ts)
+
+
+def _read_committed_tokens(
+    spark: SparkSession,
+    out_root: str,
+    fmt: str,
+    by: str,
+    since_ts: float | None,
+    until_ts: float | None,
+) -> DataFrame:
+    """Re-sum the token tier over batches whose `tok:<batch_id>` marker
+    is committed at manifest time in (since_ts, until_ts] (None = open
+    end): the manifest-sized committed set filters the tier through a
+    broadcast left-semi join, then the bounded (group, ep, t) re-sum."""
     cat = Catalog(out_root, fmt)
     m = checkpoint.read_manifest(spark, cat).where(
         (F.col("status") == "done")
         & F.col("partition_id").startswith("tok:")
-        & (F.col("ts") > F.lit(float(since_ts)))
     )
+    if since_ts is not None:
+        m = m.where(F.col("ts") > F.lit(float(since_ts)))
     if until_ts is not None:
         m = m.where(F.col("ts") <= F.lit(float(until_ts)))
     committed = m.select(

@@ -715,46 +715,33 @@ def dist_drift(
     (2 structs per token, ONE (group, bucket, token) agg — no
     separate tier build, no second tier-sized shuffle; the r5 shape
     re-derived the histogram in four subtrees). When serving from a
-    materialized tier (`counts=`), the tier rows double-emit through
-    the same single re-agg with the tier cached. Per-bucket totals
+    materialized tier (`counts=`), the tier rows take the same
+    two-struct explode (c per row instead of 1) into the same single
+    re-agg; the caller's frame is never cached. Per-bucket totals
     ride the paired frame (cached, read twice) and join back
     broadcast — buckets-bounded either way."""
     step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
     if counts is None:
-        ex = seq.select(
+        counts = seq.select(
             by,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep0"),
+            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
             F.explode(tokens_col).alias("t"),
+            F.lit(1).alias("c"),
         ).where(F.col("t") != pad_id)
-        em = ex.select(
-            by,
-            "t",
-            F.explode(
-                F.array(
-                    F.struct(
-                        F.col("ep0").alias("ep"),
-                        F.lit(1).alias("cc"),
-                        F.lit(0).alias("cp"),
-                    ),
-                    F.struct(
-                        (F.col("ep0") + step).alias("ep"),
-                        F.lit(0).alias("cc"),
-                        F.lit(1).alias("cp"),
-                    ),
-                )
-            ).alias("e"),
-        ).select(by, F.col("e.ep").alias("ep"), "t", "e.cc", "e.cp")
-    else:
-        counts = counts.cache()
-        zero = F.lit(0).cast("bigint")
-        cur = counts.select(
-            by, "ep", "t", F.col("c").alias("cc"), zero.alias("cp")
-        )
-        prv = counts.select(
-            by, (F.col("ep") + step).alias("ep"), "t",
-            zero.alias("cc"), F.col("c").alias("cp"),
-        )
-        em = cur.unionByName(prv)
+    c = F.col("c").cast("bigint")
+    zero = F.lit(0).cast("bigint")
+    em = counts.select(
+        by,
+        "t",
+        F.explode(
+            F.array(
+                F.struct(F.col("ep").alias("ep"), c.alias("cc"), zero.alias("cp")),
+                F.struct(
+                    (F.col("ep") + step).alias("ep"), zero.alias("cc"), c.alias("cp")
+                ),
+            )
+        ).alias("e"),
+    ).select(by, F.col("e.ep").alias("ep"), "t", "e.cc", "e.cp")
     joined = em.groupBy(by, "ep", "t").agg(
         F.sum("cc").cast("bigint").alias("cc"),
         F.sum("cp").cast("bigint").alias("cp"),

@@ -91,6 +91,22 @@ def _merge_aggs():
     ]
 
 
+def _row_salt(nsalt: int):
+    """Deterministic per-row salt in [0, nsalt): a hash of the row."""
+    return F.pmod(
+        F.xxhash64(F.col("event_ts"), F.coalesce(F.col("value"), F.lit(0.0))),
+        F.lit(nsalt),
+    )
+
+
+def _two_phase(raw: DataFrame, tier: str, salt) -> DataFrame:
+    """Phase 1 groups by (keys, window, salt); phase 2 merges the
+    per-salt partial states to the tier's (keys, window)."""
+    w = F.date_trunc(_trunc(tier), F.col("event_ts")).alias("window_start")
+    phase1 = raw.groupBy(*KEYS, w, salt.alias("_salt")).agg(*_phase1_aggs())
+    return phase1.groupBy(*KEYS, "window_start").agg(*_merge_aggs())
+
+
 def rollup(raw: DataFrame, tier: str = "1m") -> DataFrame:
     """raw (source, series_id, event_ts, value) → tier partial state."""
     w = F.date_trunc(_trunc(tier), F.col("event_ts")).alias("window_start")
@@ -196,13 +212,7 @@ def rollup_salted(raw: DataFrame, tier: str = "1m", nsalt: int = C.DEFAULT_NSALT
     algebraic. Salt is a deterministic hash of the row so reruns are
     reproducible (no rand()).
     """
-    salt = F.pmod(
-        F.xxhash64(F.col("event_ts"), F.coalesce(F.col("value"), F.lit(0.0))),
-        F.lit(nsalt),
-    ).alias("_salt")
-    w = F.date_trunc(_trunc(tier), F.col("event_ts")).alias("window_start")
-    phase1 = raw.groupBy(*KEYS, w, salt).agg(*_phase1_aggs())
-    return phase1.groupBy(*KEYS, "window_start").agg(*_merge_aggs())
+    return _two_phase(raw, tier, _row_salt(nsalt))
 
 
 def detect_hot_keys(raw: DataFrame, top_k: int = 2) -> DataFrame:
@@ -245,16 +255,8 @@ def rollup_salted_hot(
         KEYS,
         "left",
     )
-    salt = F.when(
-        F.col("_hot").isNotNull(),
-        F.pmod(
-            F.xxhash64(F.col("event_ts"), F.coalesce(F.col("value"), F.lit(0.0))),
-            F.lit(nsalt),
-        ),
-    ).otherwise(F.lit(0)).alias("_salt")
-    w = F.date_trunc(_trunc(tier), F.col("event_ts")).alias("window_start")
-    phase1 = tagged.groupBy(*KEYS, w, salt).agg(*_phase1_aggs())
-    return phase1.groupBy(*KEYS, "window_start").agg(*_merge_aggs())
+    salt = F.when(F.col("_hot").isNotNull(), _row_salt(nsalt)).otherwise(F.lit(0))
+    return _two_phase(tagged, tier, salt)
 
 
 def downsample_minmax(raw: DataFrame, tier: str = "1h") -> DataFrame:
