@@ -827,6 +827,97 @@ def test_cusum_one_bucket_key_is_flat(spark):
     assert any(r["alarm"] for r in out if r["k"] == "S")
 
 
+def _bucket_rows(spark, ts_type):
+    """Key S: hour 0 holds 1, 2 and a null (mean 1.5), hour 1 only
+    nulls, hour 2 one 4.0, hour 3 holds 0.5, 1, 3 (mean 1.5). Key T has
+    only a null."""
+    from datetime import datetime, timedelta
+
+    t0 = datetime(2026, 1, 1)
+    rows = [
+        ("S", t0, 1.0),
+        ("S", t0 + timedelta(minutes=20), 2.0),
+        ("S", t0 + timedelta(minutes=59), None),
+        ("S", t0 + timedelta(hours=1), None),
+        ("S", t0 + timedelta(hours=1, minutes=30), None),
+        ("S", t0 + timedelta(hours=2, minutes=5), 4.0),
+        ("S", t0 + timedelta(hours=3), 0.5),
+        ("S", t0 + timedelta(hours=3, minutes=1), 1.0),
+        ("S", t0 + timedelta(hours=3, minutes=2), 3.0),
+        ("T", t0, None),
+    ]
+    return spark.createDataFrame(
+        rows, f"k string, event_ts {ts_type}, value double"
+    )
+
+
+def test_bucket_means_through_cusum(spark):
+    """The bucket front end: one row per (key, hour) holding the mean
+    of the non-null values; an hour, or a key, with only nulls has no
+    row."""
+    out = analytics.cusum(_bucket_rows(spark, "timestamp"), keys=["k"])
+    got = sorted((r["k"], r["ep"], r["v"]) for r in out.collect())
+    t0 = 1767225600  # 2026-01-01T00:00:00Z
+    assert got == [
+        ("S", t0, 1.5), ("S", t0 + 7200, 4.0), ("S", t0 + 10800, 1.5)
+    ]
+
+
+def test_bucket_timestamp_types_agree_under_utc(spark):
+    ltz = analytics.cusum(_bucket_rows(spark, "timestamp"), keys=["k"])
+    ntz = analytics.cusum(_bucket_rows(spark, "timestamp_ntz"), keys=["k"])
+    assert sorted(ltz.collect()) == sorted(ntz.collect())
+
+
+def test_bucket_timestamp_types_under_kolkata(spark):
+    """Under Asia/Kolkata (UTC+5:30) both timestamp types bucket
+    without error, and TIMESTAMP_NTZ buckets sit on local wall-clock
+    hours: 2026-01-01 00:00 local is epoch 1767205800."""
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        eps = {}
+        for ts_type in ("timestamp", "timestamp_ntz"):
+            rows = analytics.cusum(
+                _bucket_rows(spark, ts_type), keys=["k"]
+            ).collect()
+            assert sorted(r["v"] for r in rows) == [1.5, 1.5, 4.0], ts_type
+            eps[ts_type] = sorted(r["ep"] for r in rows)
+        assert eps["timestamp_ntz"] == [
+            1767205800, 1767205800 + 7200, 1767205800 + 10800
+        ]
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
+def test_bucket_scale_rounds_half_up_through_kendall(spark):
+    """kendall_matrix compares bucket means on the 10^-grain grid. At
+    grain 0, X's hourly means 1.0, 1.4, 2.5, 3.4 round (half up) to
+    1, 1, 3, 3: against a strictly rising Y that is 4 concordant pairs
+    and 2 ties in x. At grain 6 the same means are all distinct."""
+    from datetime import datetime, timedelta
+
+    t0 = datetime(2026, 1, 1)
+    rows = [
+        ("X", t0, 0.5), ("X", t0 + timedelta(minutes=30), 1.5),
+        ("X", t0 + timedelta(hours=1), 1.4),
+        ("X", t0 + timedelta(hours=2), 2.5),
+        ("X", t0 + timedelta(hours=3), 3.4),
+    ] + [("Y", t0 + timedelta(hours=h), float(h)) for h in range(4)]
+    df = spark.createDataFrame(rows, "k string, event_ts timestamp, value double")
+    (g0,) = analytics.kendall_matrix(df, keys=["k"], grain=0).collect()
+    assert (g0["n0"], g0["nc"], g0["nd"], g0["tx"], g0["ty"]) == (6, 4, 0, 2, 0)
+    (g6,) = analytics.kendall_matrix(df, keys=["k"]).collect()
+    assert (g6["nc"], g6["tx"], g6["tau_b"]) == (6, 0, 1.0)
+
+
+def test_trunc_outside_the_operator_domain_raises(spark):
+    df = _bucket_rows(spark, "timestamp")
+    with pytest.raises(ValueError, match="completeness"):
+        analytics.completeness(df, keys=["k"], trunc="day")
+    with pytest.raises(KeyError):
+        analytics.acf(df, keys=["k"], trunc="week")
+
+
 def test_pair_operators_leave_no_persisted_rdds(spark):
     """bigram_pmi_topk, kendall_matrix and cusum leave the session's
     storage status as they found it: a collected call persists no RDD."""

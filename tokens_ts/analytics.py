@@ -17,6 +17,34 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 
+from tokens_ts import config as C
+
+
+def _buckets(
+    df: DataFrame,
+    keys: list,
+    ts_col: str,
+    value_col: str,
+    trunc: str,
+    scale: float | None = None,
+) -> DataFrame:
+    """(keys…, ep, v): the mean of the non-null `value_col` per keys and
+    `date_trunc(trunc)` epoch second — the shared front end of the
+    bucketed operators (one map-side-combined agg). With `scale`, v is
+    that mean on the integer grid, round(mean · scale) as bigint.
+    `keys` are column names or Column expressions."""
+    v = F.avg(value_col)
+    if scale is not None:
+        v = F.round(v * F.lit(float(scale))).cast("bigint")
+    return (
+        df.where(F.col(value_col).isNotNull())
+        .groupBy(
+            *keys,
+            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
+        )
+        .agg(v.alias("v"))
+    )
+
 
 def with_ewma(
     df: DataFrame,
@@ -643,23 +671,16 @@ def acf(
     shuffle), then the lag fan-out (explode 1..max_lag) and the
     self-equi-join on (keys, epoch) act on the buckets-bounded frame;
     the final agg is (keys × max_lag)-sized. No window sort at all."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
+    step = C.TRUNC_S[trunc]
     # bucket frame backs both join sides: cache the buckets-bounded
     # frame so the corpus bucket agg runs once (r6 single-scan rule)
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("_ep"),
-        )
-        .agg(F.avg(value_col).alias("_v"))
-    ).cache()
+    b = _buckets(df, keys, ts_col, value_col, trunc).cache()
     left = b.select(
-        *keys, "_ep", F.col("_v").alias("_x"),
+        *keys, "ep", F.col("v").alias("_x"),
         F.explode(F.sequence(F.lit(1), F.lit(max_lag))).alias("lag"),
-    ).withColumn("_ep_r", F.col("_ep") + F.col("lag") * F.lit(step))
+    ).withColumn("_ep_r", F.col("ep") + F.col("lag") * F.lit(step))
     right = b.select(
-        *keys, F.col("_ep").alias("_ep_r"), F.col("_v").alias("_y")
+        *keys, F.col("ep").alias("_ep_r"), F.col("v").alias("_y")
     )
     pairs = left.join(right, [*keys, "_ep_r"])
     agg = pairs.groupBy(*keys, "lag").agg(
@@ -710,25 +731,19 @@ def ccf(
     self-equi-join on (epoch) between two buckets-bounded frames with
     the a<b filter; lag fan-out explodes 2·max_lag+1 on the bounded
     frame; final agg is (#pairs × #lags)-sized."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            key_col,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("_ep"),
-        )
-        .agg(F.avg(value_col).alias("_v"))
-    ).cache()  # backs both join sides — corpus bucket agg runs once (r6)
+    step = C.TRUNC_S[trunc]
+    # backs both join sides — corpus bucket agg runs once (r6)
+    b = _buckets(df, [key_col], ts_col, value_col, trunc).cache()
     left = b.select(
-        F.col(key_col).alias("series_a"), "_ep", F.col("_v").alias("_x"),
+        F.col(key_col).alias("series_a"), "ep", F.col("v").alias("_x"),
         F.explode(
             F.sequence(F.lit(-max_lag), F.lit(max_lag))
         ).alias("lag"),
-    ).withColumn("_ep_r", F.col("_ep") + F.col("lag") * F.lit(step))
+    ).withColumn("_ep_r", F.col("ep") + F.col("lag") * F.lit(step))
     right = b.select(
         F.col(key_col).alias("series_b"),
-        F.col("_ep").alias("_ep_r"),
-        F.col("_v").alias("_y"),
+        F.col("ep").alias("_ep_r"),
+        F.col("v").alias("_y"),
     )
     pairs = left.join(right, "_ep_r").where(
         F.col("series_a") < F.col("series_b")
@@ -781,27 +796,20 @@ def seasonal_naive_error(
     Shapes: ONE bucket agg over raw rows, then two self-equi-joins on
     (keys, epoch arithmetic) between buckets-bounded frames and a
     per-key finisher agg."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
+    step = C.TRUNC_S[trunc]
     sstep = {"hour": 3600, "day": 86400, "week": 604800}[season]
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("_ep"),
-        )
-        .agg(F.avg(value_col).alias("_v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
 
     def _mae(shift: int, name: str) -> DataFrame:
         fc = b.select(
-            *keys, (F.col("_ep") + shift).alias("_ep"), F.col("_v").alias("_f")
+            *keys, (F.col("ep") + shift).alias("ep"), F.col("v").alias("_f")
         )
         return (
-            b.join(fc, [*keys, "_ep"])
+            b.join(fc, [*keys, "ep"])
             .groupBy(*keys)
             .agg(
                 F.count("*").cast("bigint").alias(f"n_{name}"),
-                F.avg(F.abs(F.col("_v") - F.col("_f"))).alias(f"mae_{name}"),
+                F.avg(F.abs(F.col("v") - F.col("_f"))).alias(f"mae_{name}"),
             )
         )
 
@@ -852,14 +860,7 @@ def holt_linear(
     Shapes: ONE bucket agg over raw rows, then ONE shuffle on the key
     to co-locate each series; per-group state is O(#buckets per key)
     — bounded by the calendar, never by corpus rows."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     import pandas as pd  # noqa: F401  (Arrow stage dependency)
 
     out_fields = ", ".join(
@@ -922,14 +923,7 @@ def cusum(
     aggregates on that same key shuffle (no stats join; σ=0 or a
     1-bucket series → z=0). slack=0.5 and threshold=4 are
     binary-exact doubles. Alarm = either side exceeds threshold."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     kw = Window.partitionBy(*keys)
     z = b.withColumns(
         {"_mu": F.avg("v").over(kw), "_sd": F.stddev_pop("v").over(kw)}
@@ -1121,14 +1115,7 @@ def corr_matrix(
     ON BUCKET and a per-pair algebraic agg — series^2 x buckets-
     bounded, never corpus-sized. Pairs with <2 common buckets or a
     constant side emit null."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     kid = F.concat_ws("", *keys)
     a = b.select(kid.alias("ka"), "ep", F.col("v").alias("x"))
     bb = b.select(kid.alias("kb"), "ep", F.col("v").alias("y"))
@@ -1247,14 +1234,7 @@ def holt_winters(
 
     Shapes: ONE bucket agg, ONE key shuffle into the Arrow stage,
     O(buckets + P) state per key."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     key_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in b.select(*keys).schema.fields
@@ -1405,14 +1385,7 @@ def spearman_matrix(
     feeds TWO join branches (Spark re-executes it per branch): at
     corpus scale pass the materialized tier (finish(t1h) means) as
     `df` so the re-executed input is buckets-bounded, not raw."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     kid = F.concat_ws("", *keys)
     a = b.select(kid.alias("ka"), "ep", F.col("v").alias("x"))
     bb = b.select(kid.alias("kb"), "ep", F.col("v").alias("y"))
@@ -1467,15 +1440,8 @@ def theil_sen(
     pairs per group, bounded by the calendar, never by corpus rows;
     the exact median is per-group. Groups with <2 sub-buckets emit
     null."""
-    sub = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.date_trunc(per, F.col(ts_col)).alias("w"),
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    w = F.date_trunc(per, F.col(ts_col)).alias("w")
+    sub = _buckets(df, [*keys, w], ts_col, value_col, trunc)
     l = sub.select(*keys, "w", F.col("ep").alias("e1"), F.col("v").alias("v1"))
     r = sub.select(*keys, "w", F.col("ep").alias("e2"), F.col("v").alias("v2"))
     pairs = l.join(r, [*keys, "w"]).where(F.col("e1") < F.col("e2"))
@@ -1523,14 +1489,7 @@ def decompose(
     feeds both the profile agg and the output join (two branches →
     the upstream agg re-executes): decompose a materialized TIER at
     corpus scale so the re-executed input is buckets-bounded."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     w = (
         Window.partitionBy(*keys)
         .orderBy("ep")
@@ -1751,7 +1710,11 @@ def completeness(
     both sides are calendar-bounded). All slot/day math is integer
     epoch arithmetic, cross-engine exact; coverage is a ratio of small
     ints (IEEE-exact)."""
-    step = {"minute": 60, "hour": 3600}[trunc]
+    if trunc not in ("minute", "hour"):
+        raise ValueError(
+            f"completeness: trunc must be 'minute' or 'hour', got {trunc!r}"
+        )
+    step = C.TRUNC_S[trunc]
     slot = F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col)))
     slots = df.select(*keys, slot.alias("slot")).distinct()
     present = (
@@ -1815,14 +1778,7 @@ def pettitt(
     epoch achieving K (pinned tie rule), and the asymptotic
     p ≈ min(1, 2·exp(−6K²/(n³+n²))) — integer-argument exp, rounded
     e6. Keys with n < 2 have no interior split and are dropped."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     wk = Window.partitionBy(*keys)
     r = b.select(
         *keys,
@@ -2157,14 +2113,7 @@ def spectral_power(
     identical inputs, drowned by the e6 grain after summation."""
     import math
 
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     mu = b.groupBy(*keys).agg(F.avg("v").alias("_mu"))
     d = b.join(F.broadcast(mu), keys).select(
         *keys,
@@ -2254,14 +2203,7 @@ def hurst_rs(
     same (key, w, block) partitioning (moments + running sum — one
     shuffle since the explode is only |sizes|×buckets), then
     blocks-/keys-bounded aggs and one broadcast H join back."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     idx = F.row_number().over(
         Window.partitionBy(*keys).orderBy("ep")
     ) - 1
@@ -2360,14 +2302,7 @@ def kalman_level(
 
     Shapes: ONE bucket agg, ONE shuffle on the key; per-group state is
     O(#buckets per key) — calendar-bounded, never corpus-bounded."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     out_fields = ", ".join(
         f"{f.name} {f.dataType.simpleString()}"
         for f in b.select(*keys).schema.fields
@@ -2435,14 +2370,7 @@ def variance_ratio(
     no Python."""
     if q < 2:
         raise ValueError(f"variance_ratio: q must be >= 2, got {q}")
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     w = Window.partitionBy(*keys).orderBy("ep")
     d = b.select(
         *keys,
@@ -2491,18 +2419,9 @@ def kendall_matrix(
     buckets-bounded; the bucket-pair self-join is per (pair, DAY) —
     ≤ C(24,2) = 276 rows per pair-day at hourly grain, calendar-
     bounded, never corpus-sized. No Python."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.date_format(F.date_trunc("day", F.col(ts_col)), "yyyy-MM-dd").alias("day"),
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(
-            F.round(F.avg(value_col) * F.lit(float(10 ** grain)))
-            .cast("bigint")
-            .alias("v")
-        )
+    day = F.date_format(F.date_trunc("day", F.col(ts_col)), "yyyy-MM-dd")
+    b = _buckets(
+        df, [*keys, day.alias("day")], ts_col, value_col, trunc, 10 ** grain
     )
     kid = F.concat_ws("", *keys)
     a = b.select(kid.alias("ka"), "day", "ep", F.col("v").alias("x"))
@@ -2566,14 +2485,7 @@ def ar1_half_life(
 
     Shapes: one bucket agg, one window pass for the lag, one
     keys-bounded agg — no Python, no self-join."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     w = Window.partitionBy(*keys).orderBy("ep")
     p = b.select(
         *keys,
@@ -2689,14 +2601,7 @@ def hampel_filter(
     Shapes: one bucket agg, ONE shuffle on the key, then the centered
     ROWS frame collects ≤ 2·half+1 elements per row — O(window) state,
     row-local median/MAD folds, no Python, no self-join."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.avg(value_col).alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc)
     w = (
         Window.partitionBy(*keys)
         .orderBy("ep")
@@ -2771,22 +2676,15 @@ def spc_rules(
     key; n/S/Q ride a whole-partition frame and the rule windows are
     bounded ROWS frames over the same sort — no joins, no Python."""
     d19 = "decimal(19,0)"
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("_v6"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wall = Window.partitionBy(*keys)
     st = b.select(
-        *keys, "ep", "_v6",
+        *keys, "ep", "v",
         F.count("*").over(wall).alias("spc_n"),
-        F.sum("_v6").over(wall).alias("_s"),
-        F.sum(F.col("_v6").cast(d19) * F.col("_v6")).over(wall).alias("_q"),
+        F.sum("v").over(wall).alias("_s"),
+        F.sum(F.col("v").cast(d19) * F.col("v")).over(wall).alias("_q"),
     )
-    a = F.col("_v6") * F.col("spc_n") - F.col("_s")
+    a = F.col("v") * F.col("spc_n") - F.col("_s")
     bb = (
         F.col("spc_n").cast(d19) * F.col("_q")
         - F.col("_s").cast(d19) * F.col("_s")
@@ -2804,7 +2702,7 @@ def spc_rules(
     w3, w5, w8 = (wo.rowsBetween(-(m - 1), 0) for m in (3, 5, 8))
     out = d.select(
         *keys, "ep", "spc_n", "spc_side",
-        (F.col("_v6") / 1e6).alias("v"),
+        (F.col("v") / 1e6).alias("v"),
         F.round(F.col("_s").cast("double") / F.col("spc_n")).cast("bigint").alias("spc_center_e6"),
         F.round(F.sqrt(F.col("_b").cast("double")) / F.col("spc_n")).cast("bigint").alias("spc_sigma_e6"),
         (F.col("_a2") > 9 * F.col("_b")).alias("spc_r1"),
@@ -2850,21 +2748,14 @@ def quantile_normalize(
     10^12 scale would swap the pooled rank for a percentile sketch,
     the same trade as A4's GK twin). Two keyed window passes + one
     pos equi-join, no Python."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.to_date(F.date_trunc("day", F.col(ts_col))).alias("day"),
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v6"))
-    )
-    ws = Window.partitionBy(*keys, "day").orderBy("v6", "ep")
+    day = F.to_date(F.date_trunc("day", F.col(ts_col))).alias("day")
+    b = _buckets(df, [*keys, day], ts_col, value_col, trunc, 1e6)
+    ws = Window.partitionBy(*keys, "day").orderBy("v", "ep")
     wsd = Window.partitionBy(*keys, "day")
     wd = Window.partitionBy("day")
-    wp = Window.partitionBy("day").orderBy("v6", *keys, "ep")
+    wp = Window.partitionBy("day").orderBy("v", *keys, "ep")
     ranked = b.select(
-        *keys, "day", "ep", "v6",
+        *keys, "day", "ep", "v",
         F.row_number().over(ws).alias("r"),
         F.count("*").over(wsd).alias("ns"),
         F.count("*").over(wd).alias("nn"),
@@ -2875,14 +2766,14 @@ def quantile_normalize(
         1 + F.floor((F.col("r") - 1) * (F.col("nn") - 1) / (F.col("ns") - 1)),
     ).otherwise(1 + F.floor((F.col("nn") - 1) / 2))
     left = ranked.select(
-        *keys, "day", "ep", "v6", "r", "ns",
+        *keys, "day", "ep", "v", "r", "ns",
         pos.cast("bigint").alias("pos"),
     )
-    pooled = ranked.select("day", F.col("pr").alias("pos"), F.col("v6").alias("qn6"))
+    pooled = ranked.select("day", F.col("pr").alias("pos"), F.col("v").alias("qn6"))
     out = left.join(pooled, ["day", "pos"])
     return out.select(
         *keys, "day", "ep",
-        (F.col("v6") / 1e6).alias("v"),
+        (F.col("v") / 1e6).alias("v"),
         F.col("r").alias("qn_rank"),
         F.col("ns").alias("qn_n"),
         (F.col("qn6") / 1e6).alias("qn_value"),
@@ -3061,23 +2952,14 @@ def max_drawdown(
     Scale shape: one corpus-sized bucket agg (map-side combined),
     then three window passes + one ranked filter on the
     keys x buckets-bounded frame — a single shuffle on the key."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(
-            F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v_e6"),
-        )
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wrun = Window.partitionBy(*keys).orderBy("ep").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
     wlag = Window.partitionBy(*keys).orderBy("ep")
     wall = Window.partitionBy(*keys)
     r = (
-        b.withColumn("runmax", F.max("v_e6").over(wrun))
+        b.withColumn("runmax", F.max("v").over(wrun))
         .withColumn("_prevmax", F.lag("runmax").over(wlag))
         .withColumn(
             "_peak_mark",
@@ -3088,7 +2970,7 @@ def max_drawdown(
             ),
         )
         .withColumn("peak_ep", F.last("_peak_mark", ignorenulls=True).over(wrun))
-        .withColumn("dd_e6", F.col("runmax") - F.col("v_e6"))
+        .withColumn("dd_e6", F.col("runmax") - F.col("v"))
     )
     r = (
         r.withColumn(
@@ -3271,7 +3153,7 @@ def dispersion_stats(
     then one agg to a keys-bounded frame — a strict subset of the
     rollup lineage, no windows, no joins."""
     ep = F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col)))
-    step = {"hour": 3600, "day": 86400, "minute": 60}[trunc]
+    step = C.TRUNC_S[trunc]
     c = events.groupBy(*keys, ep.alias("_ep")).agg(
         F.count("*").cast("bigint").alias("_c")
     )
@@ -3564,14 +3446,7 @@ def mannwhitney_drift(
     Scale shape: one bucket agg, three window passes on the SAME key
     partitioning, one keys-bounded tie-sum join — the standard
     keys×buckets lineage, single key shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     r = b.select(
         *keys,
@@ -3706,14 +3581,7 @@ def haar_energy(
     on the SAME key partitioning (buckets halve each level) — the
     rollup-cascade lineage, single key shuffle chain, no windows
     wider than the keys×buckets frame."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e3).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e3)
     wk = Window.partitionBy(*keys).orderBy("ep")
     cur = b.select(
         *keys, F.row_number().over(wk).alias("r"), F.col("v").alias("s")
@@ -3794,13 +3662,8 @@ def typical_day(
 
     Scale shape: one bucket agg, one map-side-combined agg to
     keys×24 rows."""
-    ep = F.unix_timestamp(F.date_trunc("hour", F.col(ts_col)))
-    b = (
-        events.where(F.col(value_col).isNotNull())
-        .groupBy(*keys, ep.alias("_ep"))
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
-    hod = ((F.col("_ep") / 3600).cast("bigint") % 24).alias("hour_of_day")
+    b = _buckets(events, keys, ts_col, value_col, "hour", 1e6)
+    hod = ((F.col("ep") / 3600).cast("bigint") % 24).alias("hour_of_day")
     aggs = [F.count("*").cast("bigint").alias("n_obs")]
     for q in qs:
         aggs.append(
@@ -4706,14 +4569,7 @@ def runs_test(
     the order-statistic windows (by value) and the run-boundary lag
     window (by epoch) share the same key partitioning over the
     buckets-bounded frame — a single key shuffle, no joins."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     byv = wk.orderBy("v", "ep")
     r = b.select(
@@ -4801,21 +4657,14 @@ def pacf(
     the only corpus-sized shuffle; the 3-lag fan-out and the
     self-equi-join on (keys, epoch) act on the buckets-bounded frame;
     the conditional-sum pivot collapses to ONE row per key."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("_ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e3).cast("bigint").alias("_v"))
-    )
+    step = C.TRUNC_S[trunc]
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e3)
     left = b.select(
-        *keys, "_ep", F.col("_v").alias("_x"),
+        *keys, "ep", F.col("v").alias("_x"),
         F.explode(F.sequence(F.lit(1), F.lit(3))).alias("_lag"),
-    ).withColumn("_ep_r", F.col("_ep") + F.col("_lag") * F.lit(step))
+    ).withColumn("_ep_r", F.col("ep") + F.col("_lag") * F.lit(step))
     right = b.select(
-        *keys, F.col("_ep").alias("_ep_r"), F.col("_v").alias("_y")
+        *keys, F.col("ep").alias("_ep_r"), F.col("v").alias("_y")
     )
     pairs = left.join(right, [*keys, "_ep_r"])
     sums = pairs.groupBy(*keys, "_lag").agg(
@@ -4893,32 +4742,26 @@ def granger(
     Shapes: ONE bucket agg over raw rows; triples = two self-equi-
     joins on bucket epoch between buckets-bounded frames; final agg
     is pairs-bounded. No window over raw rows."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
-    scale = float(10 ** grid)
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("_sid"),
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("_ep"),
-        )
-        .agg(F.round(F.avg(value_col) * scale).cast("bigint").alias("_v"))
+    step = C.TRUNC_S[trunc]
+    b = _buckets(
+        df, [F.col(key_col).alias("_sid")], ts_col, value_col, trunc, 10 ** grid
     )
     cur = b.select(
-        F.col("_sid").alias("series_y"), "_ep", F.col("_v").alias("_y")
+        F.col("_sid").alias("series_y"), "ep", F.col("v").alias("_y")
     )
     ylag = b.select(
         F.col("_sid").alias("series_y"),
-        (F.col("_ep") + step).alias("_ep"),
-        F.col("_v").alias("_u"),
+        (F.col("ep") + step).alias("ep"),
+        F.col("v").alias("_u"),
     )
     xlag = b.select(
         F.col("_sid").alias("series_x"),
-        (F.col("_ep") + step).alias("_ep"),
-        F.col("_v").alias("_x"),
+        (F.col("ep") + step).alias("ep"),
+        F.col("v").alias("_x"),
     )
     tri = (
-        cur.join(ylag, ["series_y", "_ep"])
-        .join(xlag, "_ep")
+        cur.join(ylag, ["series_y", "ep"])
+        .join(xlag, "ep")
         .where(F.col("series_x") != F.col("series_y"))
     )
     a = tri.groupBy("series_x", "series_y").agg(
@@ -4989,25 +4832,20 @@ def changepoint_mean(
     Shapes: ONE bucket agg, then prefix/total sums over the buckets-
     bounded frame sharing a single (key) partitioning; argmax is a
     max_by struct agg, not a sort. No second shuffle."""
-    scale = float(10 ** grid)
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("series_id"),
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("_ep"),
-        )
-        .agg(F.round(F.avg(value_col) * scale).cast("bigint").alias("_v"))
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
     )
     wall = Window.partitionBy("series_id")
-    wpre = wall.orderBy("_ep").rowsBetween(Window.unboundedPreceding, 0)
+    wpre = wall.orderBy("ep").rowsBetween(Window.unboundedPreceding, 0)
     p = b.select(
         "series_id",
-        "_ep",
+        "ep",
         F.count("*").over(wall).alias("n"),
-        F.sum("_v").over(wall).alias("t"),
-        F.sum(F.col("_v") * F.col("_v")).over(wall).alias("q"),
-        F.sum("_v").over(wpre).alias("s"),
-        F.row_number().over(wall.orderBy("_ep")).alias("k"),
+        F.sum("v").over(wall).alias("t"),
+        F.sum(F.col("v") * F.col("v")).over(wall).alias("q"),
+        F.sum("v").over(wpre).alias("s"),
+        F.row_number().over(wall.orderBy("ep")).alias("k"),
     ).where(F.col("k") < F.col("n"))
     nd = F.col("n").cast("double")
     kd = F.col("k").cast("double")
@@ -5020,7 +4858,7 @@ def changepoint_mean(
         "n",
         "t",
         "q",
-        "_ep",
+        "ep",
         "k",
         "s",
         gain.alias("_gain"),
@@ -5030,8 +4868,8 @@ def changepoint_mean(
         F.max("t").alias("_t"),
         F.max("q").alias("_q"),
         F.max_by(
-            F.struct("_ep", "k", "s", "_gain"),
-            F.struct(F.col("_gain"), (-F.col("_ep")).alias("nep")),
+            F.struct("ep", "k", "s", "_gain"),
+            F.struct(F.col("_gain"), (-F.col("ep")).alias("nep")),
         ).alias("w"),
     )
     nd2 = F.col("n_buckets").cast("double")
@@ -5045,7 +4883,7 @@ def changepoint_mean(
     return best.select(
         "series_id",
         "n_buckets",
-        F.col("w._ep").alias("cp_epoch"),
+        F.col("w.ep").alias("cp_epoch"),
         F.col("w.k").alias("k_left"),
         F.round(F.col("w._gain") / (10.0 ** grid) / (10.0 ** grid) * 1e6)
         .cast("bigint")
@@ -5055,28 +4893,6 @@ def changepoint_mean(
         .alias("strength_e6"),
         F.round(mb).cast("bigint").alias(f"mean_before_e{grid}"),
         F.round(ma).cast("bigint").alias(f"mean_after_e{grid}"),
-    )
-
-
-def _hourly_grid_buckets(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    value_col: str,
-    trunc: str = "hour",
-    grid: int = 3,
-) -> DataFrame:
-    """(series_id, _ep, _v) hourly/minute/day bucket means on the
-    e-`grid` integer grid — the shared exactness front end of the
-    complexity/econometrics operators (one map-side-combined agg)."""
-    scale = float(10 ** grid)
-    return (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            F.col(key_col).alias("series_id"),
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("_ep"),
-        )
-        .agg(F.round(F.avg(value_col) * scale).cast("bigint").alias("_v"))
     )
 
 
@@ -5107,22 +4923,25 @@ def sample_entropy(
     Shapes: ONE bucket agg; lead-window template assembly and the
     i<j pair self-join both run per (series, day) — ≤24 rows → ≤276
     pairs per group, embarrassingly parallel at any corpus size."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, "hour", grid)
-    b = b.withColumn("_day", F.col("_ep") - F.col("_ep") % 86400)
-    w = Window.partitionBy("series_id", "_day").orderBy("_ep")
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        "hour", 10 ** grid,
+    )
+    b = b.withColumn("_day", F.col("ep") - F.col("ep") % 86400)
+    w = Window.partitionBy("series_id", "_day").orderBy("ep")
     t = b.select(
         "series_id",
         "_day",
-        "_v",
+        "v",
         F.row_number().over(w).alias("_i"),
         F.when(
-            F.lead("_ep", 1).over(w) == F.col("_ep") + 3600,
-            F.lead("_v", 1).over(w),
+            F.lead("ep", 1).over(w) == F.col("ep") + 3600,
+            F.lead("v", 1).over(w),
         ).alias("_v1"),
         F.when(
-            (F.lead("_ep", 1).over(w) == F.col("_ep") + 3600)
-            & (F.lead("_ep", 2).over(w) == F.col("_ep") + 7200),
-            F.lead("_v", 2).over(w),
+            (F.lead("ep", 1).over(w) == F.col("ep") + 3600)
+            & (F.lead("ep", 2).over(w) == F.col("ep") + 7200),
+            F.lead("v", 2).over(w),
         ).alias("_v2"),
     )
     nd = F.col("n").cast("double")
@@ -5130,8 +4949,8 @@ def sample_entropy(
         b.groupBy("series_id", "_day")
         .agg(
             F.count("*").alias("n"),
-            F.sum("_v").alias("s"),
-            F.sum(F.col("_v") * F.col("_v")).alias("q"),
+            F.sum("v").alias("s"),
+            F.sum(F.col("v") * F.col("v")).alias("q"),
         )
         .select(
             "series_id",
@@ -5151,12 +4970,12 @@ def sample_entropy(
     )
     lft = t.select(
         "series_id", "_day",
-        F.col("_i").alias("_il"), F.col("_v").alias("_vl"),
+        F.col("_i").alias("_il"), F.col("v").alias("_vl"),
         F.col("_v1").alias("_v1l"), F.col("_v2").alias("_v2l"),
     )
     rgt = t.select(
         "series_id", "_day",
-        F.col("_i").alias("_ir"), F.col("_v").alias("_vr"),
+        F.col("_i").alias("_ir"), F.col("v").alias("_vr"),
         F.col("_v1").alias("_v1r"), F.col("_v2").alias("_v2r"),
     )
     pairs = (
@@ -5234,17 +5053,20 @@ def cointegration(
     Shapes: ONE bucket agg; pair frame = self-equi-join on epoch
     (pairs·buckets rows); per-pair sums twice; α/β rejoin is
     pairs-bounded broadcast. No window over raw rows."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
+    step = C.TRUNC_S[trunc]
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
     l = b.select(
-        F.col("series_id").alias("series_a"), "_ep",
-        F.col("_v").alias("_x"),
+        F.col("series_id").alias("series_a"), "ep",
+        F.col("v").alias("_x"),
     )
     r = b.select(
-        F.col("series_id").alias("series_b"), "_ep",
-        F.col("_v").alias("_y"),
+        F.col("series_id").alias("series_b"), "ep",
+        F.col("v").alias("_y"),
     )
-    p = l.join(r, "_ep").where(F.col("series_a") < F.col("series_b"))
+    p = l.join(r, "ep").where(F.col("series_a") < F.col("series_b"))
     s1 = p.groupBy("series_a", "series_b").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("_x").alias("sx"),
@@ -5271,7 +5093,7 @@ def cointegration(
         .select(
             "series_a",
             "series_b",
-            "_ep",
+            "ep",
             F.round(
                 F.col("_y").cast("double")
                 - F.col("alpha")
@@ -5281,16 +5103,16 @@ def cointegration(
             .alias("_q"),
         )
     )
-    w = Window.partitionBy("series_a", "series_b").orderBy("_ep")
+    w = Window.partitionBy("series_a", "series_b").orderBy("ep")
     d = res.select(
         "series_a",
         "series_b",
         F.when(
-            F.lag("_ep", 1).over(w) == F.col("_ep") - step,
+            F.lag("ep", 1).over(w) == F.col("ep") - step,
             F.col("_q") - F.lag("_q", 1).over(w),
         ).alias("_d"),
         F.when(
-            F.lag("_ep", 1).over(w) == F.col("_ep") - step,
+            F.lag("ep", 1).over(w) == F.col("ep") - step,
             F.lag("_q", 1).over(w),
         ).alias("_l"),
     ).where(F.col("_d").isNotNull())
@@ -5342,26 +5164,29 @@ def hjorth(
     three finishers are one shared IEEE tree. Population variance;
     var ≤ 0 or too few rows ⇒ null for the ratios that need it,
     activity_e6 reported whenever n ≥ 2."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
-    w = Window.partitionBy("series_id").orderBy("_ep")
-    adj1 = F.lag("_ep", 1).over(w) == F.col("_ep") - step
-    adj2 = adj1 & (F.lag("_ep", 2).over(w) == F.col("_ep") - 2 * step)
+    step = C.TRUNC_S[trunc]
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
+    w = Window.partitionBy("series_id").orderBy("ep")
+    adj1 = F.lag("ep", 1).over(w) == F.col("ep") - step
+    adj2 = adj1 & (F.lag("ep", 2).over(w) == F.col("ep") - 2 * step)
     t = b.select(
         "series_id",
-        "_v",
-        F.when(adj1, F.col("_v") - F.lag("_v", 1).over(w)).alias("_d1"),
+        "v",
+        F.when(adj1, F.col("v") - F.lag("v", 1).over(w)).alias("_d1"),
         F.when(
             adj2,
-            F.col("_v")
-            - 2 * F.lag("_v", 1).over(w)
-            + F.lag("_v", 2).over(w),
+            F.col("v")
+            - 2 * F.lag("v", 1).over(w)
+            + F.lag("v", 2).over(w),
         ).alias("_d2"),
     )
     a = t.groupBy("series_id").agg(
         F.count("*").cast("bigint").alias("n"),
-        F.sum("_v").alias("s0"),
-        F.sum(F.col("_v") * F.col("_v")).alias("q0"),
+        F.sum("v").alias("s0"),
+        F.sum(F.col("v") * F.col("v")).alias("q0"),
         F.count("_d1").cast("bigint").alias("n1"),
         F.sum("_d1").alias("s1"),
         F.sum(F.col("_d1") * F.col("_d1")).alias("q1"),
@@ -5416,15 +5241,18 @@ def turning_points(
     Counts are exact integer comparisons of e-grid ints (ties are NOT
     turning points — strict, pinned); z is one shared IEEE tree.
     n < 3 ⇒ no triple ⇒ null z with n_turning 0, row kept."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
-    w = Window.partitionBy("series_id").orderBy("_ep")
-    prv, nxt = F.lag("_v", 1).over(w), F.lead("_v", 1).over(w)
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
+    w = Window.partitionBy("series_id").orderBy("ep")
+    prv, nxt = F.lag("v", 1).over(w), F.lead("v", 1).over(w)
     turn = F.when(
         prv.isNotNull()
         & nxt.isNotNull()
         & (
-            ((prv < F.col("_v")) & (nxt < F.col("_v")))
-            | ((prv > F.col("_v")) & (nxt > F.col("_v")))
+            ((prv < F.col("v")) & (nxt < F.col("v")))
+            | ((prv > F.col("v")) & (nxt > F.col("v")))
         ),
         1,
     ).otherwise(0)
@@ -5563,11 +5391,14 @@ def esd_outliers(
     buckets-bounded frame against keys-bounded stats, one max_by agg,
     one anti join — `rounds` is a small constant, so the whole
     cascade is a fixed-depth plan with no corpus rescans."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
     stats = b.groupBy("series_id").agg(
         F.count("*").cast("bigint").alias("n"),
-        F.sum("_v").alias("s"),
-        F.sum(F.col("_v") * F.col("_v")).alias("q"),
+        F.sum("v").alias("s"),
+        F.sum(F.col("v") * F.col("v")).alias("q"),
     )
     frame = b
     picks = []
@@ -5578,16 +5409,16 @@ def esd_outliers(
         j = frame.join(stats, "series_id").where(
             (F.col("n") >= 3) & (var > 0)
         )
-        score = F.abs(F.col("_v").cast("double") - m) / F.sqrt(var)
+        score = F.abs(F.col("v").cast("double") - m) / F.sqrt(var)
         pick = j.groupBy("series_id").agg(
             F.max("n").alias("n_used"),
             F.max_by(
                 F.struct(
-                    F.col("_ep").alias("ep"),
-                    F.col("_v").alias("v"),
+                    F.col("ep"),
+                    F.col("v"),
                     score.alias("sc"),
                 ),
-                F.struct(score, (-F.col("_ep")).alias("nep")),
+                F.struct(score, (-F.col("ep")).alias("nep")),
             ).alias("w"),
         )
         picks.append(
@@ -5605,11 +5436,11 @@ def esd_outliers(
         if r < rounds:
             rem = pick.select(
                 "series_id",
-                F.col("w.ep").alias("_ep"),
+                F.col("w.ep").alias("ep"),
                 F.col("w.v").alias("_pv"),
             )
             frame = frame.join(
-                rem.select("series_id", "_ep"), ["series_id", "_ep"],
+                rem.select("series_id", "ep"), ["series_id", "ep"],
                 "left_anti",
             )
             stats = (
@@ -5752,12 +5583,15 @@ def mann_kendall(
     per-key self-join (b²/2 rows per series — fine at rollup-tier
     cardinality, the same budget as kendall_matrix); the tie agg is a
     second pass over the bounded bucket frame, same key partitioning."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
     l = b.select(
-        "series_id", F.col("_ep").alias("_ei"), F.col("_v").alias("_vi")
+        "series_id", F.col("ep").alias("_ei"), F.col("v").alias("_vi")
     )
     r = b.select(
-        "series_id", F.col("_ep").alias("_ej"), F.col("_v").alias("_vj")
+        "series_id", F.col("ep").alias("_ej"), F.col("v").alias("_vj")
     )
     s = (
         l.join(r, "series_id")
@@ -5770,7 +5604,7 @@ def mann_kendall(
         )
     )
     ties = (
-        b.groupBy("series_id", "_v")
+        b.groupBy("series_id", "v")
         .agg(F.count("*").cast("bigint").alias("t"))
         .groupBy("series_id")
         .agg(
@@ -5829,23 +5663,26 @@ def partial_corr(
 
     Shapes: ONE bucket agg; two self-equi-joins on epoch build the
     triple frame (pairs·buckets-bounded); one triple-keyed agg."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
     x = b.select(
-        F.col("series_id").alias("series_x"), "_ep",
-        F.col("_v").alias("_x"),
+        F.col("series_id").alias("series_x"), "ep",
+        F.col("v").alias("_x"),
     )
     y = b.select(
-        F.col("series_id").alias("series_y"), "_ep",
-        F.col("_v").alias("_y"),
+        F.col("series_id").alias("series_y"), "ep",
+        F.col("v").alias("_y"),
     )
     zc = b.select(
-        F.col("series_id").alias("series_z"), "_ep",
-        F.col("_v").alias("_z"),
+        F.col("series_id").alias("series_z"), "ep",
+        F.col("v").alias("_z"),
     )
     tri = (
-        x.join(y, "_ep")
+        x.join(y, "ep")
         .where(F.col("series_x") < F.col("series_y"))
-        .join(zc, "_ep")
+        .join(zc, "ep")
         .where(
             (F.col("series_z") != F.col("series_x"))
             & (F.col("series_z") != F.col("series_y"))
@@ -5914,17 +5751,20 @@ def adf_test(
 
     Shapes: ONE bucket agg, a per-key lag window on the bounded
     bucket frame (no self-join), one per-key agg."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
-    step = {"hour": 3600, "minute": 60, "day": 86400}[trunc]
-    w = Window.partitionBy("series_id").orderBy("_ep")
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
+    step = C.TRUNC_S[trunc]
+    w = Window.partitionBy("series_id").orderBy("ep")
     pairs = (
-        b.withColumn("_pep", F.lag("_ep").over(w))
-        .withColumn("_pv", F.lag("_v").over(w))
-        .where(F.col("_pep") == F.col("_ep") - step)
+        b.withColumn("_pep", F.lag("ep").over(w))
+        .withColumn("_pv", F.lag("v").over(w))
+        .where(F.col("_pep") == F.col("ep") - step)
         .select(
             "series_id",
             F.col("_pv").alias("_x"),
-            (F.col("_v") - F.col("_pv")).alias("_y"),
+            (F.col("v") - F.col("_pv")).alias("_y"),
         )
     )
     a = pairs.groupBy("series_id").agg(
@@ -5981,15 +5821,18 @@ def seasonal_mann_kendall(
     Shapes: ONE bucket agg; the pairwise frame is a per-(key, season)
     self-join — 24× smaller than plain MK's per-key pairs at equal
     span; tie agg on the same bounded bucket frame."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, "hour", grid)
-    b = b.withColumn("_hod", (F.col("_ep") / 3600 % 24).cast("int"))
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        "hour", 10 ** grid,
+    )
+    b = b.withColumn("_hod", (F.col("ep") / 3600 % 24).cast("int"))
     l = b.select(
-        "series_id", "_hod", F.col("_ep").alias("_ei"),
-        F.col("_v").alias("_vi"),
+        "series_id", "_hod", F.col("ep").alias("_ei"),
+        F.col("v").alias("_vi"),
     )
     r = b.select(
-        "series_id", "_hod", F.col("_ep").alias("_ej"),
-        F.col("_v").alias("_vj"),
+        "series_id", "_hod", F.col("ep").alias("_ej"),
+        F.col("v").alias("_vj"),
     )
     s = (
         l.join(r, ["series_id", "_hod"])
@@ -6001,7 +5844,7 @@ def seasonal_mann_kendall(
             .alias("s_stat")
         )
     )
-    pg = b.groupBy("series_id", "_hod", "_v").agg(
+    pg = b.groupBy("series_id", "_hod", "v").agg(
         F.count("*").cast("bigint").alias("t")
     )
     gv = pg.groupBy("series_id", "_hod").agg(
@@ -6065,18 +5908,21 @@ def matrix_profile_daily(
     parallel at any corpus size, the sampen/dtw budget. Days whose
     windows admit NO non-overlapping pair keep their row with null
     discord/motif (profile of nothing is not a number)."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, "hour", grid)
-    b = b.withColumn("_dy", F.col("_ep") - F.col("_ep") % 86400)
-    w = Window.partitionBy("series_id", "_dy").orderBy("_ep")
-    cols = [F.col("_v").alias("_v0")]
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        "hour", 10 ** grid,
+    )
+    b = b.withColumn("_dy", F.col("ep") - F.col("ep") % 86400)
+    w = Window.partitionBy("series_id", "_dy").orderBy("ep")
+    cols = [F.col("v").alias("_v0")]
     cond = F.lit(True)
     for i in range(1, m):
         cond = cond & (
-            F.lead("_ep", i).over(w) == F.col("_ep") + i * 3600
+            F.lead("ep", i).over(w) == F.col("ep") + i * 3600
         )
-        cols.append(F.lead("_v", i).over(w).alias(f"_v{i}"))
+        cols.append(F.lead("v", i).over(w).alias(f"_v{i}"))
     wins = (
-        b.select("series_id", "_dy", "_ep", *cols, cond.alias("_ok"))
+        b.select("series_id", "_dy", "ep", *cols, cond.alias("_ok"))
         .where(F.col("_ok"))
         .drop("_ok")
     )
@@ -6084,11 +5930,11 @@ def matrix_profile_daily(
         F.count("*").cast("bigint").alias("n_windows")
     )
     l = wins.select(
-        "series_id", "_dy", F.col("_ep").alias("_ea"),
+        "series_id", "_dy", F.col("ep").alias("_ea"),
         *[F.col(f"_v{i}").alias(f"_a{i}") for i in range(m)],
     )
     r = wins.select(
-        "series_id", "_dy", F.col("_ep").alias("_eb"),
+        "series_id", "_dy", F.col("ep").alias("_eb"),
         *[F.col(f"_v{i}").alias(f"_b{i}") for i in range(m)],
     )
     dist = sum(
@@ -6165,15 +6011,18 @@ def sen_slope_ci(
     per-key self-join; rank selection via one per-key sort window on
     the pairs-bounded frame. Series with <2 buckets keep their row
     with nulls."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
     nb = b.groupBy("series_id").agg(
         F.count("*").cast("bigint").alias("n_buckets")
     )
     l = b.select(
-        "series_id", F.col("_ep").alias("_ei"), F.col("_v").alias("_vi")
+        "series_id", F.col("ep").alias("_ei"), F.col("v").alias("_vi")
     )
     r = b.select(
-        "series_id", F.col("_ep").alias("_ej"), F.col("_v").alias("_vj")
+        "series_id", F.col("ep").alias("_ej"), F.col("v").alias("_vj")
     )
     slopes = (
         l.join(r, "series_id")
@@ -6195,7 +6044,7 @@ def sen_slope_ci(
         "series_id", "_s", F.row_number().over(ws).alias("_rn")
     )
     ties = (
-        b.groupBy("series_id", "_v")
+        b.groupBy("series_id", "v")
         .agg(F.count("*").cast("bigint").alias("t"))
         .groupBy("series_id")
         .agg(
@@ -6434,14 +6283,7 @@ def kruskal_dow(
     Scale shape: one bucket agg, rank windows on the SAME key
     partitioning, then every frame is keys- or keys×7-bounded — the
     standard keys×buckets lineage, single key shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     r = b.select(
         *keys,
@@ -6629,19 +6471,11 @@ def brown_forsythe_dow(
     median order-statistic windows ride the SAME (keys, dow)
     partitioning; then keys×7- and keys-bounded aggs. Single key
     shuffle lineage."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e3).cast("bigint").alias("v"))
-        .withColumn(
-            "_g",
-            F.pmod(
-                (F.col("ep") / F.lit(86400)).cast("bigint") + 3, F.lit(7)
-            ).cast("bigint"),
-        )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e3).withColumn(
+        "_g",
+        F.pmod(
+            (F.col("ep") / F.lit(86400)).cast("bigint") + 3, F.lit(7)
+        ).cast("bigint"),
     )
     wg = Window.partitionBy(*keys, "_g")
     byv = wg.orderBy("v", "ep")
@@ -6814,14 +6648,7 @@ def welch_drift(
     Scale shape: one bucket agg, one ordering window on the same key
     partitioning, one keys-bounded conditional agg. Single key
     shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e3).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e3)
     wk = Window.partitionBy(*keys)
     r = b.select(
         *keys,
@@ -6976,14 +6803,7 @@ def longest_run(
     Scale shape: one bucket agg, order-statistic + lag + running-sum
     windows on the SAME key partitioning, then runs- and keys-bounded
     aggs. Single key shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     byv = wk.orderBy("v", "ep")
     r = b.select(
@@ -7056,14 +6876,7 @@ def extremal_index(
     Scale shape: one bucket agg, the order-statistic and lag windows
     on the SAME key partitioning, clusters- and keys-bounded aggs.
     Single key shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     r = b.select(
         *keys,
@@ -7143,14 +6956,7 @@ def record_counts(
     same key partitioning, one keys-bounded agg. The harmonic term
     rides the SAME rows (round(1e9/rank) summed) — no series join, no
     generate_series."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     byep = wk.orderBy("ep")
     prior = byep.rowsBetween(Window.unboundedPreceding, -1)
@@ -7214,14 +7020,7 @@ def qq_drift(
     Scale shape: one bucket agg, the split + two rank windows on the
     SAME key partitioning, a 9-row constant explode on the halves-
     bounded frame, keys×9-bounded output. Single key shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     r = b.select(
         *keys,
@@ -7296,14 +7095,7 @@ def vol_clustering(
 
     Scale shape: one bucket agg + two lag windows on the same key
     partitioning + one keys-bounded agg. Single key shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e3).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e3)
     wk = Window.partitionBy(*keys)
     byep = wk.orderBy("ep")
     step = 3600
@@ -7443,17 +7235,10 @@ def conformal_interval(
 
     Scale shape: one bucket agg, lag + split + rank windows on the
     SAME key partitioning, keys-bounded agg. Single key shuffle."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e6)
     wk = Window.partitionBy(*keys)
     byep = wk.orderBy("ep")
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
+    step = C.TRUNC_S[trunc]
     r = b.select(
         *keys,
         "ep",
@@ -7892,23 +7677,26 @@ def kpss_test(
 
     Shapes: ONE bucket agg, two windows on the bounded bucket frame
     (per-key cumsum + per-key totals), one per-key agg."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
-    wo = Window.partitionBy("series_id").orderBy("_ep")
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
+    wo = Window.partitionBy("series_id").orderBy("ep")
     wa = Window.partitionBy("series_id").rowsBetween(
         Window.unboundedPreceding, Window.unboundedFollowing
     )
     r = b.select(
         "series_id",
-        F.col("_v"),
+        F.col("v"),
         F.row_number().over(wo).alias("_i"),
-        F.sum("_v").over(
+        F.sum("v").over(
             wo.rowsBetween(Window.unboundedPreceding, 0)
         ).alias("_c"),
-        F.sum("_v").over(wa).alias("_t"),
+        F.sum("v").over(wa).alias("_t"),
         F.count("*").over(wa).alias("_n"),
     )
     nn = F.col("_n").cast("double")
-    e_t = (F.col("_n") * F.col("_v") - F.col("_t")).cast("double") / nn
+    e_t = (F.col("_n") * F.col("v") - F.col("_t")).cast("double") / nn
     s_t = (F.col("_n") * F.col("_c") - F.col("_i") * F.col("_t")).cast(
         "double"
     ) / nn
@@ -7962,19 +7750,11 @@ def anova_dow(
 
     Scale shape: one bucket partial agg off the corpus scan, then
     keys×7- and keys-bounded aggs. Single key shuffle lineage."""
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            F.unix_timestamp(F.date_trunc(trunc, F.col(ts_col))).alias("ep"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e3).cast("bigint").alias("v"))
-        .withColumn(
-            "_g",
-            F.pmod(
-                (F.col("ep") / F.lit(86400)).cast("bigint") + 3, F.lit(7)
-            ).cast("bigint"),
-        )
+    b = _buckets(df, keys, ts_col, value_col, trunc, 1e3).withColumn(
+        "_g",
+        F.pmod(
+            (F.col("ep") / F.lit(86400)).cast("bigint") + 3, F.lit(7)
+        ).cast("bigint"),
     )
     g = b.groupBy(*keys, "_g").agg(
         F.count("*").cast("bigint").alias("_n"),
@@ -8223,9 +8003,12 @@ def did_pairs(
     Shapes: ONE corpus bucket agg; the pair frame is series²-bounded
     control-plane; buckets join it twice (series-key equi-joins);
     final aggs are pair-bounded."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
     mm = b.groupBy("series_id").agg(
-        F.min("_ep").alias("_lo"), F.max("_ep").alias("_hi")
+        F.min("ep").alias("_lo"), F.max("ep").alias("_hi")
     )
     p = (
         mm.select(
@@ -8253,14 +8036,14 @@ def did_pairs(
     )
     ua = p.join(b, p.series_a == b.series_id).select(
         "series_a", "series_b", "boundary_ep",
-        F.lit("a").alias("_side"), "_ep", "_v",
+        F.lit("a").alias("_side"), "ep", "v",
     )
     ub = p.join(b, p.series_b == b.series_id).select(
         "series_a", "series_b", "boundary_ep",
-        F.lit("b").alias("_side"), "_ep", "_v",
+        F.lit("b").alias("_side"), "ep", "v",
     )
     u = ua.unionByName(ub).withColumn(
-        "_post", (F.col("_ep") >= F.col("boundary_ep")).cast("int")
+        "_post", (F.col("ep") >= F.col("boundary_ep")).cast("int")
     )
     def cell(side, post, expr, name):
         return F.sum(
@@ -8275,8 +8058,8 @@ def did_pairs(
             for post in (0, 1)
             for c in (
                 cell(side, post, F.lit(1), f"n_{side}{post}"),
-                cell(side, post, F.col("_v"), f"s_{side}{post}"),
-                cell(side, post, F.col("_v") * F.col("_v"), f"q_{side}{post}"),
+                cell(side, post, F.col("v"), f"s_{side}{post}"),
+                cell(side, post, F.col("v") * F.col("v"), f"q_{side}{post}"),
             )
         ]
     ).where(
@@ -8343,34 +8126,37 @@ def binseg2(
     Shapes: ONE bucket agg; the level-1 winner is a series-bounded
     frame joined back to the SAME prefix frame (no second corpus
     shuffle); both argmaxes are aggs, never sorts."""
-    b = _hourly_grid_buckets(df, key_col, ts_col, value_col, trunc, grid)
+    b = _buckets(
+        df, [F.col(key_col).alias("series_id")], ts_col, value_col,
+        trunc, 10 ** grid,
+    )
     wall = Window.partitionBy("series_id")
-    wpre = wall.orderBy("_ep").rowsBetween(Window.unboundedPreceding, 0)
+    wpre = wall.orderBy("ep").rowsBetween(Window.unboundedPreceding, 0)
     p = b.select(
         "series_id",
-        "_ep",
+        "ep",
         F.count("*").over(wall).alias("n"),
-        F.sum("_v").over(wall).alias("t"),
-        F.sum(F.col("_v") * F.col("_v")).over(wall).alias("q"),
-        F.sum("_v").over(wpre).alias("s"),
-        F.row_number().over(wall.orderBy("_ep")).alias("k"),
+        F.sum("v").over(wall).alias("t"),
+        F.sum(F.col("v") * F.col("v")).over(wall).alias("q"),
+        F.sum("v").over(wpre).alias("s"),
+        F.row_number().over(wall.orderBy("ep")).alias("k"),
     )
     cand1 = p.where((F.col("k") < F.col("n")) & (F.col("n") >= 3))
     nd = F.col("n").cast("double")
     kd = F.col("k").cast("double")
     a1 = nd * F.col("s").cast("double") - kd * F.col("t").cast("double")
     g1 = (a1 * a1 / (kd * (nd - kd) * nd)).alias("_g")
-    best1 = cand1.select("series_id", "_ep", "k", "s", g1).groupBy(
+    best1 = cand1.select("series_id", "ep", "k", "s", g1).groupBy(
         "series_id"
     ).agg(
         F.max_by(
             F.struct(
-                F.col("_ep").alias("ep1"),
+                F.col("ep").alias("ep1"),
                 F.col("k").alias("k1"),
                 F.col("s").alias("s1"),
                 F.col("_g").alias("g1"),
             ),
-            F.struct(F.col("_g"), (-F.col("_ep")).alias("nep")),
+            F.struct(F.col("_g"), (-F.col("ep")).alias("nep")),
         ).alias("w1")
     ).select("series_id", "w1.*")
     j = p.join(best1, "series_id").where(F.col("k") != F.col("k1"))
@@ -8385,7 +8171,7 @@ def binseg2(
     a2 = md * (F.col("s") - sa).cast("double") - jd * (sb - sa).cast("double")
     g2 = (a2 * a2 / (jd * rd * md)).alias("_g2")
     cand2 = j.where((F.col("k") - a_ >= 1) & (b_ - F.col("k") >= 1)).select(
-        "series_id", "n", "t", "q", "_ep", "k", "s",
+        "series_id", "n", "t", "q", "ep", "k", "s",
         "ep1", "k1", "s1", "g1", g2,
     )
     best = cand2.groupBy("series_id").agg(
@@ -8398,12 +8184,12 @@ def binseg2(
         F.max("g1").alias("_g1"),
         F.max_by(
             F.struct(
-                F.col("_ep").alias("ep2"),
+                F.col("ep").alias("ep2"),
                 F.col("k").alias("k2"),
                 F.col("s").alias("s2"),
                 F.col("_g2").alias("g2"),
             ),
-            F.struct(F.col("_g2"), (-F.col("_ep")).alias("nep")),
+            F.struct(F.col("_g2"), (-F.col("ep")).alias("nep")),
         ).alias("w2"),
     )
     nd2 = F.col("n_buckets").cast("double")

@@ -45,5 +45,6 @@ def source_budget(k_total: int, s: int) -> int:
 DEFAULT_SOURCES = 8
 TIERS = ("1m", "1h", "1d")
 TIER_TRUNC = {"1m": "minute", "1h": "hour", "1d": "day"}
+TRUNC_S = {"minute": 60, "hour": 3600, "day": 86400}   # date_trunc unit → s
 # salting (SURVEY.md A8): number of salt buckets for skewed two-phase agg
 DEFAULT_NSALT = 16

@@ -14,6 +14,9 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, Window
 from pyspark.sql.types import IntegerType
 
+from tokens_ts import config as C
+
+
 def _words():
     # built lazily: Column construction needs an active SparkContext
     return F.split(F.trim(F.col("text")), r"\s+")
@@ -658,22 +661,6 @@ def token_histogram(
     re-layout ships tier-sized (not explode-sized) rows once at
     build, amortized over every token-major read of the materialized
     tier."""
-    return _token_histogram_raw(
-        seq, by, ts_col, tokens_col, pad_id, trunc
-    ).repartition(by, "t")
-
-
-def _token_histogram_raw(
-    seq: DataFrame,
-    by: str = "source",
-    ts_col: str = "event_ts",
-    tokens_col: str = "tokens",
-    pad_id: int = 0,
-    trunc: str = "hour",
-) -> DataFrame:
-    """token_histogram without the (group, token) clustering pass —
-    for consumers whose downstream shape cannot reuse it (dist_drift
-    pairs buckets via a partitioning-destroying union)."""
     return (
         seq.select(
             by,
@@ -683,6 +670,7 @@ def _token_histogram_raw(
         .where(F.col("t") != pad_id)
         .groupBy(by, "ep", "t")
         .agg(F.count("*").alias("c"))
+        .repartition(by, "t")
     )
 
 
@@ -720,7 +708,7 @@ def dist_drift(
     re-agg; the caller's frame is never cached. Per-bucket totals
     ride the paired frame (cached, read twice) and join back
     broadcast — buckets-bounded either way."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
+    step = C.TRUNC_S[trunc]
     if counts is None:
         counts = seq.select(
             by,
@@ -853,7 +841,7 @@ def topk_turnover(
     (group, bucket) over ≤ vocab rows per partition; everything after
     is k×buckets-bounded. Pass `counts=` (a token_histogram frame) to
     serve from the materialized tier."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
+    step = C.TRUNC_S[trunc]
     if counts is None:
         counts = token_histogram(seq, by, ts_col, tokens_col, pad_id, trunc)
     w = Window.partitionBy(by, "ep").orderBy(F.desc("c"), F.asc("t"))
@@ -992,7 +980,7 @@ def decay_topk(
     it (the one corpus-sized op); the per-group max-bucket frame is
     groups-bounded and broadcast back; scoring + ranking are
     vocab-bounded. Rank ties → smaller token id."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
+    step = C.TRUNC_S[trunc]
     if counts is None:
         counts = token_histogram(seq, by, ts_col, tokens_col, pad_id, trunc)
     # tier feeds the latest-bucket agg AND the aged scoring join:
@@ -1624,7 +1612,7 @@ def nll_drift(
     vocab²×buckets-bounded; the scoring join is cur-bigrams ⋈ shifted
     prev-counts on (group, a, b, epoch arithmetic) — the ks_drift
     epoch-shift equi-join, no windows, no corpus self-join."""
-    step = {"minute": 60, "hour": 3600, "day": 86400}[trunc]
+    step = C.TRUNC_S[trunc]
     toks = F.col(tokens_col)
     pairs = seq.select(
         by,

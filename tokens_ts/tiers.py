@@ -550,7 +550,7 @@ def enforce_retention(
     return dropped
 
 
-_TIER_WIDTH_S = {"1m": 60, "1h": 3600, "1d": 86400}
+_TIER_WIDTH_S = {t: C.TRUNC_S[u] for t, u in C.TIER_TRUNC.items()}
 _UTC_ZONES = frozenset({"UTC", "Etc/UTC", "GMT", "Etc/GMT"})
 
 

@@ -7,7 +7,7 @@ them, so no rotation can leave pairs unaudited) and writes GATES_rN.json:
   {"sf0.01": {pair: {status, rows, wall_s}}, "sf0.1": {...},
    "summary": {...}}
 
-Usage: python tools/run_gates.py [round_tag]   (default r5)
+Usage: python tools/run_gates.py ROUND_TAG   (e.g. r7 → GATES_r7.json)
 """
 
 from __future__ import annotations
@@ -84,7 +84,9 @@ def run_sf(spark, sf_dir: str) -> dict:
 
 
 def main():
-    tag = sys.argv[1] if len(sys.argv) > 1 else "r5"
+    if len(sys.argv) != 2:
+        sys.exit("usage: python tools/run_gates.py ROUND_TAG  (e.g. r7)")
+    tag = sys.argv[1]
     from pyspark.sql import SparkSession
 
     spark = (
