@@ -4438,6 +4438,46 @@ def test_page_trend_hand_worked_and_antitrend(spark):
     assert fr["inc"] == fr["dec"]
 
 
+def test_friedman_and_page_share_complete_blocks(spark):
+    """Both daypart tests read one complete-block frame: e6 cell means
+    of the non-null values, blocks missing a segment dropped, doubled
+    midranks m2 = 2·rank + t − 1 within each block."""
+    day, seg = 86400, 21600
+
+    def ev(series, d, s, value):
+        return (series, d * day + s * seg, value)
+
+    rows = [
+        # day 0, ranks 1..4 -> m2 (2, 4, 6, 8); segment 0's cell is the
+        # mean of 0.5 and 1.5, and its null value is ignored
+        ev("a", 0, 0, 0.5), ev("a", 0, 0, 1.5), ev("a", 0, 0, None),
+        ev("a", 0, 1, 2.0), ev("a", 0, 2, 3.0), ev("a", 0, 3, 4.0),
+        # day 1, a tie at rank 2 (t = 2) -> m2 (2, 5, 5, 8)
+        ev("a", 1, 0, 10.0), ev("a", 1, 1, 20.0), ev("a", 1, 2, 20.0),
+        ev("a", 1, 3, 40.0),
+        # day 2 misses segment 3: dropped, though it would reorder ranks
+        ev("a", 2, 0, 50.0), ev("a", 2, 1, 1.0), ev("a", 2, 2, 30.0),
+        # one observed segment: k = 1, dropped by both tests
+        ev("one", 0, 0, 1.0), ev("one", 1, 0, 2.0),
+    ]
+    df = spark.createDataFrame(
+        rows, "series_id string, t long, value double"
+    ).select("series_id", F.timestamp_seconds("t").alias("ts"), "value")
+    # n = 2, k = 4: R2 = (4, 9, 11, 16), A2 = 120 + 118 = 238
+    fr = analytics.friedman_dayparts(df, keys=["series_id"]).collect()
+    assert [r["series_id"] for r in fr] == ["a"]
+    # Q = (k−1)·Σ(R2 − n(k+1))² / (A2 − n·k·(k+1)²) = 3·74/38,
+    # W = Q / (n(k−1))
+    assert (fr[0]["k_treatments"], fr[0]["n_blocks"]) == (4, 2)
+    assert (fr[0]["q_e6"], fr[0]["w_e6"]) == (5_842_105, 973_684)
+    pt = analytics.page_trend(df, keys=["series_id"]).collect()
+    assert [r["series_id"] for r in pt] == ["a"]
+    # L2 = Σ j·R2_j = 119, E[L2] = n·k(k+1)²/2 = 100,
+    # Var[L] = n·k²(k+1)(k²−1)/144 = 50/3 -> z = 19 / (2·sqrt(50/3))
+    assert (pt[0]["k_treatments"], pt[0]["n_blocks"]) == (4, 2)
+    assert (pt[0]["l2"], pt[0]["z_e6"]) == (119, 2_327_015)
+
+
 # ---------------------------------------------------------------------------
 # yule_walker_ar2: the AR(2) oscillation detector
 # ---------------------------------------------------------------------------

@@ -153,74 +153,6 @@ def test_manifest_compaction_preserves_consumers(spark, seq_tiny, tmp_path):
     assert not checkpoint.is_done(spark, path, "batch:e9")
 
 
-def test_backfill_auto_salting_identity_and_targeting(spark, seq_tiny, tmp_path):
-    """salt='auto': tier outputs are bit-identical to the plain run on
-    the Zipf fixture, and the flagged hot keys are exactly the heavy
-    source's series (src00 has the largest Zipf budget; no cold key is
-    flagged, so no cold key pays phase-2 fan-in)."""
-    seq = grid.with_event_time(seq_tiny)
-    plain_root = str(tmp_path / "plain")
-    pipeline.run_backfill(spark, seq, plain_root)
-
-    auto_root = str(tmp_path / "auto")
-    r = pipeline.run_backfill(
-        spark, seq, auto_root, salt="auto", skew_ratio=1.5, commit_batch=4
-    )
-    assert r["hot_keys"], "Zipf fixture must flag hot keys"
-    assert {s for s, _ in r["hot_keys"]} == {"src00"}
-    for name in ("t1m", "t1h", "t1d"):
-        _same(
-            _tier_snapshot(spark, auto_root, name),
-            _tier_snapshot(spark, plain_root, name),
-        )
-
-
-def test_increment_auto_salting_identity(spark, seq_tiny, tmp_path):
-    """run_increment(salt='auto') lands the exact same tiers as the
-    plain increment — the engine-level skew routing extends to the
-    touched-window recompute path."""
-    seq = grid.with_event_time(seq_tiny)
-    for root, salt in ((str(tmp_path / "p"), None), (str(tmp_path / "a"), "auto")):
-        pipeline.run_backfill(spark, seq.where(F.col("k") < 200), root)
-        pipeline.run_increment(
-            spark, seq.where(F.col("k") >= 200), root,
-            batch_id="e1", salt=salt, skew_ratio=1.5,
-        )
-    for name in ("t1m", "t1h", "t1d"):
-        _same(
-            _tier_snapshot(spark, str(tmp_path / "a"), name),
-            _tier_snapshot(spark, str(tmp_path / "p"), name),
-        )
-
-
-def test_backfill_auto_salting_lineage_baseline(spark, seq_tiny, tmp_path):
-    """The lineage feed is what catches a wave consisting of ONLY the
-    hot source: its within-wave median is the hot key itself (ratio
-    test can never fire), but the manifest's points_raw from earlier
-    committed partitions supplies the honest baseline."""
-    seq = grid.with_event_time(seq_tiny)
-    root = str(tmp_path / "lin")
-    r1 = pipeline.run_backfill(
-        spark,
-        seq.where(F.col("source") != "src00"),
-        root,
-        salt="auto",
-        skew_ratio=1.5,
-    )
-    assert r1["hot_keys"] == []  # no skew among src01..03 waves
-    r2 = pipeline.run_backfill(spark, seq, root, salt="auto", skew_ratio=1.5)
-    assert sorted(r2["partitions"]) == ["src00"]
-    assert r2["hot_keys"] and {s for s, _ in r2["hot_keys"]} == {"src00"}
-    # and the lineage-salted run still lands the exact plain tiers
-    plain_root = str(tmp_path / "plain2")
-    pipeline.run_backfill(spark, seq, plain_root)
-    for name in ("t1m", "t1h", "t1d"):
-        _same(
-            _tier_snapshot(spark, root, name),
-            _tier_snapshot(spark, plain_root, name),
-        )
-
-
 def test_manifest_points_match_tables_after_backfill_and_increment(
     spark, seq_tiny, tmp_path
 ):
@@ -263,23 +195,11 @@ def test_manifest_points_match_tables_after_backfill_and_increment(
         assert got == want[r["partition_id"]], r["partition_id"]
 
 
-def test_written_tiers_equal_build_all_tiers_with_salting(
-    spark, seq_tiny, tmp_path, monkeypatch
-):
-    """salt='auto' with flagged hot keys: the tiers _write_tiers lands
-    (1m salted from raw, 1h/1d cascaded from the written finer tier)
-    equal tiers.build_all_tiers over the stored raw — after the
-    backfill, and again after an increment touching a single day."""
-    from tokens_ts import tiers
-
-    salted = []
-    real = tiers.rollup_salted_hot
-
-    def spy(*a, **kw):
-        salted.append(kw.get("hot_keys"))
-        return real(*a, **kw)
-
-    monkeypatch.setattr(pipeline.tiers, "rollup_salted_hot", spy)
+def test_written_tiers_equal_build_all_tiers(spark, seq_tiny, tmp_path):
+    """The tiers _write_tiers lands (1m rolled up from raw, 1h/1d
+    cascaded from the written finer tier) equal tiers.build_all_tiers
+    over the stored raw — after the backfill, and again after an
+    increment touching a single day."""
     seq = grid.with_event_time(seq_tiny)
     root = str(tmp_path / "s")
     cat = Catalog(root)
@@ -291,20 +211,47 @@ def test_written_tiers_equal_build_all_tiers_with_salting(
         for t, name in pipeline.TIER_NAMES.items():
             _same(_tier_snapshot(spark, root, name), _frame_snapshot(frames[t]))
 
-    r = pipeline.run_backfill(
-        spark, seq.where(F.col("k") < 300), root,
-        salt="auto", skew_ratio=1.5, commit_batch=4,
+    pipeline.run_backfill(
+        spark, seq.where(F.col("k") < 300), root, commit_batch=4
     )
-    assert r["hot_keys"] and len(salted) == 1
     check()
 
     inc = pipeline.run_increment(
-        spark, seq.where(F.col("k") >= 300), root,
-        batch_id="e1", salt="auto", skew_ratio=1.5,
+        spark, seq.where(F.col("k") >= 300), root, batch_id="e1"
     )
     assert len(inc["touched"]) == 1  # one (source, day) partition
-    assert len(salted) == 2  # the increment's slice flagged hot keys too
     check()
+
+
+def test_grid_bounds_every_1m_group(spark, seq_tiny, tmp_path):
+    """Why the 1m rollup needs no salt: on the registry grid (one
+    document per slot, integer step ≥ 1 s) a (source, series_id, 1m
+    window) group holds at most ceil(60 / step) raw points, so no
+    reduce group can grow with a hot source — it spreads over its
+    minutes. At the default 60/120/180 s steps every group holds one
+    point: t1m has exactly as many rows as raw. If extraction ever
+    emits many points per slot, this fails where salting might pay."""
+    from tokens_ts import config as C
+
+    seq = grid.with_event_time(seq_tiny)
+    root = str(tmp_path / "g")
+    pipeline.run_backfill(spark, seq, root, commit_batch=4)
+    cat = Catalog(root)
+    raw = cat.read(spark, "raw")
+    per_source = (
+        raw.groupBy(
+            "source", "series_id", F.date_trunc("minute", "event_ts")
+        )
+        .count()
+        .groupBy("source")
+        .agg(F.max("count").alias("m"))
+        .collect()
+    )
+    assert len(per_source) == 4
+    for r in per_source:
+        step = C.step_seconds(int(r["source"][3:]))
+        assert r["m"] <= math.ceil(60 / step), (r["source"], r["m"])
+    assert cat.read(spark, "t1m").count() == raw.count()
 
 
 def test_record_done_roundtrips_edge_values(spark, tmp_path):
@@ -730,15 +677,10 @@ def test_increment_replay_skipped_by_batch_id(spark, seq_tiny, tmp_path):
         _same(_tier_snapshot(spark, root, n), snap[n])
 
 
-def test_backfill_auto_salting_single_manifest_scan(
-    spark, seq_tiny, tmp_path, monkeypatch
-):
-    """The lineage baseline is read ONCE per invocation and folded
-    forward driver-side as waves commit — the per-wave manifest scan is
-    gone. With 4 pending partitions at commit_batch=1 (4 waves), the
-    number of read_manifest calls must not grow with the wave count.
-    (Decision parity with the per-wave-scan behavior is pinned by the
-    three auto-salting identity tests above.)"""
+def test_backfill_single_manifest_scan(spark, seq_tiny, tmp_path, monkeypatch):
+    """The manifest is read ONCE per invocation: with 4 pending
+    partitions at commit_batch=1 (4 waves), the number of
+    read_manifest calls must not grow with the wave count."""
     calls = {"n": 0}
     real = checkpoint.read_manifest
 
@@ -749,9 +691,7 @@ def test_backfill_auto_salting_single_manifest_scan(
     monkeypatch.setattr(pipeline.checkpoint, "read_manifest", counting)
     seq = grid.with_event_time(seq_tiny)
     root = str(tmp_path / "one_scan")
-    r = pipeline.run_backfill(
-        spark, seq, root, salt="auto", skew_ratio=1.5, commit_batch=1
-    )
+    r = pipeline.run_backfill(spark, seq, root, commit_batch=1)
     monkeypatch.undo()  # count run_backfill's calls only
     assert len(r["partitions"]) == 4
     assert {
@@ -760,7 +700,7 @@ def test_backfill_auto_salting_single_manifest_scan(
             spark, pipeline.Catalog(root, "parquet")
         ).collect()
     } == {"src00", "src01", "src02", "src03"}
-    # resume set, attempt bases and lineage baseline share ONE read
+    # resume set and attempt bases share ONE read
     assert calls["n"] == 1, calls["n"]
 
 

@@ -6334,6 +6334,51 @@ def kruskal_dow(
     )
 
 
+def _complete_blocks(
+    df: DataFrame, keys: list[str], ts_col: str, value_col: str, seg_s: int
+) -> DataFrame:
+    """The complete-block front end of friedman_dayparts and page_trend:
+    (keys…, _blk, _seg, v, _k, _bn, _m2), one row per complete
+    (block, segment) cell.
+
+    - _blk is the UTC day and _seg the day's seg_s-wide segment, both
+      integer epoch-microsecond arithmetic (no calendar function, no
+      TZ exposure); v is the cell's e6-rounded mean of the non-null
+      values;
+    - _k is the series' observed segment count and _bn the block's;
+      only blocks with _bn == _k survive;
+    - _m2 = 2·rank + t − 1 is the block-local doubled midrank of v
+      (t = the size of v's tie group), an exact bigint."""
+    ep_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
+    b = (
+        df.where(F.col(value_col).isNotNull())
+        .groupBy(
+            *keys,
+            (ep_us / F.lit(86400_000_000)).cast("bigint").alias("_blk"),
+            (
+                F.pmod(ep_us, F.lit(86400_000_000)) / F.lit(seg_s * 1_000_000)
+            ).cast("bigint").alias("_seg"),
+        )
+        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
+    )
+    k_s = F.size(F.collect_set("_seg").over(Window.partitionBy(*keys)))
+    blk_n = F.count("*").over(Window.partitionBy(*keys, "_blk"))
+    c = (
+        b.withColumn("_k", k_s)
+        .withColumn("_bn", blk_n)
+        .where(F.col("_bn") == F.col("_k"))
+    )
+    wb = Window.partitionBy(*keys, "_blk")
+    return c.withColumn(
+        "_m2",
+        (
+            2 * F.rank().over(wb.orderBy("v"))
+            + F.count("*").over(Window.partitionBy(*keys, "_blk", "v"))
+            - 1
+        ).cast("bigint"),
+    )
+
+
 def friedman_dayparts(
     df: DataFrame,
     keys: list[str],
@@ -6370,35 +6415,7 @@ def friedman_dayparts(
     Scale shape: one (keys, block, seg) partial agg off the corpus
     scan, rank windows on (keys, block), then every frame is keys- or
     keys×k-bounded. Single key shuffle lineage."""
-    ep_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            (ep_us / F.lit(86400_000_000)).cast("bigint").alias("_blk"),
-            (
-                F.pmod(ep_us, F.lit(86400_000_000)) / F.lit(seg_s * 1_000_000)
-            ).cast("bigint").alias("_seg"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
-    # series-wide treatment count k and per-block completeness
-    k_s = F.size(F.collect_set("_seg").over(Window.partitionBy(*keys)))
-    blk_n = F.count("*").over(Window.partitionBy(*keys, "_blk"))
-    c = (
-        b.withColumn("_k", k_s)
-        .withColumn("_bn", blk_n)
-        .where(F.col("_bn") == F.col("_k"))
-    )
-    wb = Window.partitionBy(*keys, "_blk")
-    r = c.withColumn(
-        "_m2",
-        (
-            2 * F.rank().over(wb.orderBy("v"))
-            + F.count("*").over(Window.partitionBy(*keys, "_blk", "v"))
-            - 1
-        ).cast("bigint"),
-    )
+    r = _complete_blocks(df, keys, ts_col, value_col, seg_s)
     per_t = r.groupBy(*keys, "_k", "_seg").agg(
         F.sum("_m2").alias("_r2"),
         F.sum(F.col("_m2") * F.col("_m2")).alias("_a2"),
@@ -7330,38 +7347,13 @@ def page_trend(
     Scale shape: identical lineage to friedman_dayparts — one
     (keys, block, seg) partial agg, block-local rank windows,
     keys-bounded finish."""
-    ep_us = F.unix_micros(F.col(ts_col).cast("timestamp"))
-    b = (
-        df.where(F.col(value_col).isNotNull())
-        .groupBy(
-            *keys,
-            (ep_us / F.lit(86400_000_000)).cast("bigint").alias("_blk"),
-            (
-                F.pmod(ep_us, F.lit(86400_000_000)) / F.lit(seg_s * 1_000_000)
-            ).cast("bigint").alias("_seg"),
-        )
-        .agg(F.round(F.avg(value_col) * 1e6).cast("bigint").alias("v"))
-    )
-    k_s = F.size(F.collect_set("_seg").over(Window.partitionBy(*keys)))
-    blk_n = F.count("*").over(Window.partitionBy(*keys, "_blk"))
-    c = (
-        b.withColumn("_k", k_s)
-        .withColumn("_bn", blk_n)
-        .where(F.col("_bn") == F.col("_k"))
-    )
-    wb = Window.partitionBy(*keys, "_blk")
     # position j = the segment's 1-based rank among the series' observed
     # segments (dense over the observed set, so a series missing nights
     # still gets contiguous positions)
     wseg = Window.partitionBy(*keys).orderBy("_seg")
-    r = c.withColumn(
-        "_m2",
-        (
-            2 * F.rank().over(wb.orderBy("v"))
-            + F.count("*").over(Window.partitionBy(*keys, "_blk", "v"))
-            - 1
-        ).cast("bigint"),
-    ).withColumn("_j", F.dense_rank().over(wseg).cast("bigint"))
+    r = _complete_blocks(df, keys, ts_col, value_col, seg_s).withColumn(
+        "_j", F.dense_rank().over(wseg).cast("bigint")
+    )
     per_t = r.groupBy(*keys, "_k", "_j").agg(
         F.sum("_m2").alias("_r2"),
         F.count("*").cast("bigint").alias("_n"),

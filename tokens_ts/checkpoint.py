@@ -173,21 +173,15 @@ def done_partitions(spark: SparkSession, where) -> DataFrame:
 
 
 def partition_summary(manifest: DataFrame) -> dict[str, dict]:
-    """partition_id → {attempt, done, points_raw} in ONE collect of a
-    (possibly pre-filtered) manifest frame: the highest attempt,
-    whether any attempt completed, and points_raw of the latest
-    completed attempt (max_by skips the null orderings of rows that
-    are not done). Control-plane sized: one row per partition id."""
-    done = F.col("status") == "done"
+    """partition_id → {attempt, done} in ONE collect of a manifest
+    frame: the highest attempt and whether any attempt completed.
+    Control-plane sized: one row per partition id."""
     return {
         r["partition_id"]: r.asDict()
         for r in manifest.groupBy("partition_id")
         .agg(
             F.max("attempt").alias("attempt"),
-            F.bool_or(done).alias("done"),
-            F.max_by(
-                "points_raw", F.when(done, F.struct("ts", "attempt"))
-            ).alias("points_raw"),
+            F.bool_or(F.col("status") == "done").alias("done"),
         )
         .collect()
     }

@@ -28,7 +28,6 @@ All tables live under a Catalog root:
 from __future__ import annotations
 
 import functools
-import statistics
 import time
 from collections.abc import Callable
 
@@ -65,76 +64,6 @@ def _raw_rows(
     )
 
 
-def _manifest_points(summary: dict[str, dict]) -> list[float]:
-    """points_raw of every committed non-batch partition (latest
-    completed attempt) in a checkpoint.partition_summary — the lineage
-    feed for the salting baseline. run_backfill derives it from its one
-    manifest collect per invocation; waves fold their own just-measured
-    points in driver-side, so the baseline stays current without
-    re-scanning the manifest per wave."""
-    return [
-        float(r["points_raw"])
-        for pid, r in summary.items()
-        # plain-source ids only: 'batch:'/'retention:' marker rows
-        # carry no per-partition ingest volume and would drag the
-        # median toward 0
-        if r["done"] and ":" not in pid and r["points_raw"] is not None
-    ]
-
-
-def _auto_hot_keys(
-    spark: SparkSession,
-    cat: Catalog,
-    raw: DataFrame,
-    skew_ratio: float = 4.0,
-    top_k: int = 4,
-    hist_points: list[float] | None = None,
-):
-    """Skew detection for salt='auto': (source, series_id) keys whose
-    row count exceeds skew_ratio × a median-key-load baseline.
-
-    The baseline has two feeds, and the engine takes the smaller:
-    - within-wave: median per-key count of the raw slice being rolled
-      up (one map-side-combined count agg — the wave is being fully
-      aggregated right after anyway);
-    - lineage: median points_raw per committed partition in the
-      manifest, divided by the wave's series-per-source — FREE (no
-      data scan), and it is what catches the wave that consists of
-      ONLY a hot source, where the within-wave median is the hot key
-      itself and the ratio test would never fire.
-
-    Returns a tiny hot-key DataFrame, or None when nothing is flagged
-    (→ plain rollup, no phase-2 merge inflation for anyone).
-    """
-    counts = raw.groupBy(*tiers.KEYS).agg(F.count("*").alias("cnt"))
-    stats = counts.agg(
-        F.median("cnt").alias("med"), F.count("*").alias("nkeys")
-    ).collect()[0]
-    if not stats["nkeys"]:
-        return None
-    baseline = float(stats["med"])
-    if hist_points is None:
-        hist_points = _manifest_points(
-            checkpoint.partition_summary(
-                checkpoint.read_manifest(spark, cat).where(
-                    ~F.col("partition_id").contains(":")
-                )
-            )
-        )
-    hist_med = statistics.median(hist_points) if hist_points else None
-    if hist_med is not None:
-        nsrc = raw.select("source").distinct().count()
-        series_per_source = max(float(stats["nkeys"]) / max(nsrc, 1), 1.0)
-        baseline = min(baseline, float(hist_med) / series_per_source)
-    hot = (
-        counts.where(F.col("cnt") > skew_ratio * baseline)
-        .orderBy(F.desc("cnt"), *[F.asc(k) for k in tiers.KEYS])
-        .limit(top_k)
-        .select(*tiers.KEYS)
-    )
-    return None if hot.isEmpty() else hot
-
-
 def run_backfill(
     spark: SparkSession,
     seq: DataFrame,
@@ -143,8 +72,6 @@ def run_backfill(
     max_partitions: int | None = None,
     fmt: str = "parquet",
     commit_batch: int = 1,
-    salt: str | None = None,
-    skew_ratio: float = 4.0,
     _crash_after_commits: int | None = None,
 ) -> dict:
     """Process pending input partitions end-to-end; returns a summary.
@@ -163,13 +90,9 @@ def run_backfill(
     distributed job, so one wave per partition keeps the cluster
     saturated; the sandbox default matches that production shape.
 
-    salt="auto" makes skew handling ENGINE behavior instead of a
-    manual operator choice: each wave's rollup consults _auto_hot_keys
-    (within-wave key counts + lineage points_raw baseline) and routes
-    through tiers.rollup_salted_hot for exactly the flagged keys —
-    output bit-identical to the plain path (algebraic state), cold
-    keys pay no merge fan-in. Flagged keys are reported in the
-    summary's "hot_keys".
+    The 1m rollup needs no salt: the window is in its key, so a hot
+    series spreads over its minutes, and with one document per grid
+    slot of at least 1 s no 1m group holds more than 60 points.
 
     _crash_after_commits is a test hook: abort after that many wave
     commits (before the invocation completes), simulating a mid-run
@@ -178,8 +101,8 @@ def run_backfill(
     cat = Catalog(out_root, fmt)
     run_id = checkpoint.new_run_id()
 
-    # ONE manifest read per invocation: resume set, attempt bases and
-    # the salt="auto" lineage baseline all come from this collect
+    # ONE manifest read per invocation: resume set and attempt bases
+    # both come from this collect
     summary = checkpoint.partition_summary(checkpoint.read_manifest(spark, cat))
     part_ids = [
         r["source"]
@@ -195,11 +118,6 @@ def run_backfill(
     t_start = time.time()
     n_commits = 0
     done_ids: list[str] = []
-    hot_keys_flagged: list[tuple[str, str]] = []
-    # lineage baseline for salt="auto": each wave folds its own
-    # measured points_raw in below, so later waves see earlier waves'
-    # commits without re-reading the manifest.
-    hist_points = _manifest_points(summary) if salt == "auto" else []
     for i in range(0, len(part_ids), max(commit_batch, 1)):
         group = part_ids[i : i + max(commit_batch, 1)]
         t_wave = time.time()
@@ -219,20 +137,7 @@ def run_backfill(
             .where(F.col("source").isin(group))
             .drop("day", "batch_id")
         )
-        hot = (
-            _auto_hot_keys(
-                spark, cat, raw_wave, skew_ratio, hist_points=hist_points
-            )
-            if salt == "auto"
-            else None
-        )
-        if hot is not None:
-            hot_keys_flagged.extend(
-                (r["source"], r["series_id"]) for r in hot.collect()
-            )
-        written = _write_tiers(
-            spark, cat, raw_wave, F.col("source").isin(group), hot
-        )
+        written = _write_tiers(spark, cat, raw_wave, F.col("source").isin(group))
 
         # per-partition metrics from the written tables in ONE job:
         # column-pruned scans of the just-written slices, unioned and
@@ -272,9 +177,6 @@ def run_backfill(
             for p in group
         ]
         checkpoint.record_done(spark, cat, rows, run_id, attempts)
-        hist_points.extend(
-            float(counts[p].get("points_raw", 0)) for p in group
-        )
         done_ids.extend(group)
         n_commits += 1
         if (
@@ -296,21 +198,16 @@ def run_backfill(
         "partitions": done_ids,
         "skipped": False,
         "wall_ms": wall_ms,
-        "hot_keys": hot_keys_flagged,
     }
 
 
 def _write_tiers(
-    spark: SparkSession,
-    cat: Catalog,
-    raw: DataFrame,
-    sel,
-    hot: DataFrame | None,
+    spark: SparkSession, cat: Catalog, raw: DataFrame, sel
 ) -> dict[str, DataFrame]:
     """Write the three tiers of a raw slice as a true cascade: 1m is
-    rolled up from `raw` (salting only the `hot` keys, when given), 1h
-    merges the 1m slice read back from the just-written table, and 1d
-    merges the written 1h slice. Returns the read-back slices by tier.
+    rolled up from `raw`, 1h merges the 1m slice read back from the
+    just-written table, and 1d merges the written 1h slice. Returns the
+    read-back slices by tier.
 
     `sel` must select whole (source, day) partitions — the backfill
     wave's sources, the increment's touched (source, day) set — and
@@ -319,11 +216,7 @@ def _write_tiers(
     the cascade equals tiers.build_all_tiers over the same raw. Rows
     are also filtered by `sel` before each write, so no overwrite can
     reach a partition outside the slice."""
-    frame = (
-        tiers.rollup_salted_hot(raw, "1m", hot_keys=hot)
-        if hot is not None
-        else tiers.rollup(raw, "1m")
-    )
+    frame = tiers.rollup(raw, "1m")
     written: dict[str, DataFrame] = {}
     for tier, name in TIER_NAMES.items():
         if written:
@@ -392,8 +285,6 @@ def run_increment(
     extraction: Callable[[DataFrame], DataFrame] = default_extraction,
     fmt: str = "parquet",
     batch_id: str | None = None,
-    salt: str | None = None,
-    skew_ratio: float = 4.0,
     _crash_after_raw: bool = False,
 ) -> dict:
     """Fold an append-only batch of new sequences into raw + all tiers,
@@ -467,15 +358,7 @@ def run_increment(
     raw_touched = (
         cat.read(spark, "raw", new_raw.schema).where(sel).drop("day", "batch_id")
     )
-    # salt="auto": same engine-level skew routing as run_backfill —
-    # the touched-window recompute is itself a rollup over possibly
-    # skewed keys (a hot source's whole day re-aggregates per batch)
-    hot = (
-        _auto_hot_keys(spark, cat, raw_touched, skew_ratio)
-        if salt == "auto"
-        else None
-    )
-    _write_tiers(spark, cat, raw_touched, sel, hot)
+    _write_tiers(spark, cat, raw_touched, sel)
     if n_in < 0:
         n_in = new_seq.count()
     # the batch's max event time rides IN the completion row: the fold

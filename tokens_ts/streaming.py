@@ -61,7 +61,6 @@ def stream_increment(
     available_now: bool = True,
     lateness: str | None = None,
     compact_every: int | None = 64,
-    salt: str | None = None,
 ):
     """Micro-batch tier refresh: every new file batch folds into
     raw/t1m/t1h/t1d via the touched-window incremental path.
@@ -96,11 +95,7 @@ def stream_increment(
     compact_every: every N epochs the manifest is compacted to one row
     per partition/batch (checkpoint.compact_manifest) — without it a
     long-lived stream's epoch gate scans one small parquet file per
-    epoch forever. None disables.
-
-    salt: forwarded to run_increment — salt="auto" applies the same
-    engine-level skew routing to every epoch's touched-window rollup
-    (lineage-fed, so later epochs inherit the corpus baseline)."""
+    epoch forever. None disables."""
     import hashlib
     import os
 
@@ -165,7 +160,7 @@ def stream_increment(
             # run_increment's completion row carries this batch's max
             # event time — the watermark advances atomically with the
             # fold commit, never in a separate (losable) write
-            pipeline.run_increment(sp, timed, out_root, batch_id=epoch, salt=salt)
+            pipeline.run_increment(sp, timed, out_root, batch_id=epoch)
             if compact_every and batch_id > 0 and batch_id % compact_every == 0:
                 checkpoint.compact_manifest(sp, cat)
         finally:

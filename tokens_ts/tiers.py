@@ -435,11 +435,7 @@ def retention_filter(
     return tier_df.where(F.col("window_start") >= cutoff)
 
 
-def build_all_tiers(
-    raw: DataFrame,
-    hot_keys: DataFrame | None = None,
-    nsalt: int = C.DEFAULT_NSALT,
-) -> dict[str, DataFrame]:
+def build_all_tiers(raw: DataFrame) -> dict[str, DataFrame]:
     """raw → {'1m': ..., '1h': ..., '1d': ...} partial-state frames.
 
     The three are lazy frames over one plan: 1h is `cascade` over the
@@ -449,18 +445,8 @@ def build_all_tiers(
     write path that cascades from the *written* finer tier — raw
     aggregated once, each step reading ~60× less data than the tier
     below it — is pipeline._write_tiers.
-
-    hot_keys: optional tiny (source, series_id) frame of keys the
-    skew detector flagged — the 1m rollup then fans ONLY those keys
-    over `nsalt` reducers (rollup_salted_hot); output is bit-identical
-    either way because the state is algebraic. The cascades never need
-    salt: their input is already reduced to one row per (key, window).
     """
-    t1m = (
-        rollup_salted_hot(raw, "1m", nsalt, hot_keys=hot_keys)
-        if hot_keys is not None
-        else rollup(raw, "1m")
-    )
+    t1m = rollup(raw, "1m")
     t1h = cascade(t1m, "1h")
     t1d = cascade(t1h, "1d")
     return {"1m": t1m, "1h": t1h, "1d": t1d}

@@ -4,7 +4,7 @@ The north-rule launch shape (BASELINE.json): jobs run via
 
     spark-submit --master <cluster> --py-files tokens_ts.zip \\
         tools/run_job.py backfill --sequences <path> --out <root> \\
-        [--fmt parquet|iceberg] [--salt auto] [--commit-batch N]
+        [--fmt parquet|iceberg] [--commit-batch N]
 
 Subcommands:
   backfill   process all pending input partitions (resumable — rerun
@@ -45,7 +45,6 @@ def cmd_backfill(args) -> dict:
         seq,
         args.out,
         fmt=args.fmt,
-        salt=args.salt,
         commit_batch=args.commit_batch,
         max_partitions=args.max_partitions,
     )
@@ -57,8 +56,7 @@ def cmd_increment(args) -> dict:
     spark = _session()
     seq = grid.with_event_time(spark.read.parquet(args.new))
     return pipeline.run_increment(
-        spark, seq, args.out, fmt=args.fmt, batch_id=args.batch_id,
-        salt=args.salt,
+        spark, seq, args.out, fmt=args.fmt, batch_id=args.batch_id
     )
 
 
@@ -110,7 +108,6 @@ def main(argv=None):
 
     b = sub.add_parser("backfill", parents=[common])
     b.add_argument("--sequences", required=True)
-    b.add_argument("--salt", default=None)
     b.add_argument("--commit-batch", type=int, default=1)
     b.add_argument("--max-partitions", type=int, default=None)
     b.set_defaults(fn=cmd_backfill)
@@ -118,7 +115,6 @@ def main(argv=None):
     i = sub.add_parser("increment", parents=[common])
     i.add_argument("--new", required=True)
     i.add_argument("--batch-id", default=None)
-    i.add_argument("--salt", default=None)
     i.set_defaults(fn=cmd_increment)
 
     r = sub.add_parser("retention", parents=[common])
