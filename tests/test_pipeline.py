@@ -553,7 +553,7 @@ def test_declared_read_schemas_match_inferred(spark, seq_tiny, tmp_path):
     pipeline.run_increment(spark, seq.where(F.col("k") >= 300), root)
     cat = Catalog(root)
     declared = {
-        "raw": pipeline._raw_rows(pipeline.default_extraction, seq, "b").schema,
+        "raw": pipeline._raw_rows(seq, "b").schema,
         **{name: tiers.TIER_SCHEMA for name in ("t1m", "t1h", "t1d")},
         "_lineage": checkpoint.MANIFEST_SCHEMA,
     }
@@ -574,7 +574,7 @@ def test_declared_read_starts_no_job(spark, seq_tiny, tmp_path):
     root = str(tmp_path / "w")
     pipeline.run_backfill(spark, seq.where(F.col("source") == "src00"), root)
     cat = Catalog(root)
-    raw_schema = pipeline._raw_rows(pipeline.default_extraction, seq, "b").schema
+    raw_schema = pipeline._raw_rows(seq, "b").schema
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     group = "test-declared-read-" + checkpoint.new_run_id()
@@ -702,6 +702,86 @@ def test_backfill_single_manifest_scan(spark, seq_tiny, tmp_path, monkeypatch):
     } == {"src00", "src01", "src02", "src03"}
     # resume set and attempt bases share ONE read
     assert calls["n"] == 1, calls["n"]
+
+
+def test_backfill_collects_twice(spark, seq_tiny, tmp_path, monkeypatch):
+    """A backfill collects twice however many waves it runs: the
+    manifest's partition summary and the pending sources. Each wave's
+    lineage (rows_in, token_checksum, points, max event time) is
+    observed on its writes, never collected."""
+    calls = {"n": 0}
+    cls = type(seq_tiny)
+    real = cls.collect
+
+    def counting(self):
+        calls["n"] += 1
+        return real(self)
+
+    monkeypatch.setattr(cls, "collect", counting)
+    seq = grid.with_event_time(seq_tiny)
+    r = pipeline.run_backfill(spark, seq, str(tmp_path / "w"), commit_batch=1)
+    monkeypatch.undo()
+    assert len(r["partitions"]) == 4
+    assert calls["n"] == 2, calls["n"]
+
+
+def test_default_extraction_equals_union_of_operators(spark, seq_tiny):
+    """The one-projection extraction emits exactly the rows of the
+    two-branch union it replaces — full_stats mean/max melted, plus
+    point p7 — edge documents included, and one row per series for
+    every input row (the backfill's input observation needs every row
+    to reach the write)."""
+    from tokens_ts import config as C
+    from tokens_ts import extract
+
+    pad = C.PAD_ID
+    # one document per edge: fewer than 8 tokens, PAD at position 7,
+    # all PAD, and an empty token array
+    edge = spark.createDataFrame(
+        [
+            ("src00-000000900000", [5, 6, 7], "src00"),
+            ("src00-000000900001", [1, 2, 3, 4, 5, 6, 7, pad, 9], "src00"),
+            ("src01-000000900002", [pad] * 10, "src01"),
+            ("src01-000000900003", [], "src01"),
+        ],
+        "doc_id string, tokens array<int>, source string",
+    ).withColumn("n_tok", F.size("tokens"))
+    seq = grid.with_event_time(
+        seq_tiny.unionByName(edge.select(*seq_tiny.columns))
+    )
+    got = pipeline.default_extraction(seq)
+    want = extract.to_raw(extract.full_stats(seq, ["mean", "max"])).unionByName(
+        extract.to_raw(extract.point(seq, 7))
+    )
+
+    def rows(df):
+        return sorted((tuple(r) for r in df.collect()), key=repr)
+
+    assert got.columns == want.columns
+    g = rows(got)
+    assert g == rows(want)
+    assert len(g) == 3 * seq.count()
+    edge_raw = pipeline.default_extraction(seq.where(F.col("k") >= 900000))
+    # the short and PAD-at-7 documents have a mean and max but no p7;
+    # the all-PAD and empty ones still emit all three, as nulls
+    assert sorted(
+        (r["series_id"], r["value"] is None) for r in edge_raw.collect()
+    ) == sorted(
+        [("full_mean", False), ("full_max", False), ("point_p7", True)] * 2
+        + [("full_mean", True), ("full_max", True), ("point_p7", True)] * 2
+    )
+
+
+def test_raw_rows_plan_scans_input_once(spark, seq_tiny, tmp_path):
+    """The raw rows' optimized plan reads the input through exactly one
+    scan, with no Union; the physical plan has no Exchange."""
+    path = str(tmp_path / "seq")
+    seq_tiny.write.parquet(path)
+    raw = pipeline._raw_rows(grid.with_event_time(spark.read.parquet(path)), "b")
+    qe = raw._jdf.queryExecution()
+    assert qe.optimizedPlan().collectLeaves().size() == 1
+    assert "Union" not in qe.optimizedPlan().toString()
+    assert "Exchange" not in qe.executedPlan().toString()
 
 
 def _file_hashes(root_dir):

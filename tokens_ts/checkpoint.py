@@ -25,7 +25,7 @@ import uuid
 
 import pyarrow as pa
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     DoubleType,
@@ -63,11 +63,19 @@ def new_run_id() -> str:
     return uuid.uuid4().hex[:12]
 
 
+def token_checksum(where: Column | None = None) -> Column:
+    """The token_checksum aggregate: xor-fold of xxhash64(doc_id, tokens)
+    over the rows where `where` holds (every row when None); null over
+    no rows."""
+    h = F.xxhash64("doc_id", "tokens")
+    return F.bit_xor(h if where is None else F.when(where, h))
+
+
 def token_checksum_by_partition(seq: DataFrame, partition_col: str = "source") -> DataFrame:
     """(partition_id, rows_in, token_checksum) — the invariant carrier."""
     return seq.groupBy(F.col(partition_col).alias("partition_id")).agg(
         F.count("*").alias("rows_in"),
-        F.bit_xor(F.xxhash64("doc_id", "tokens")).alias("token_checksum"),
+        token_checksum().alias("token_checksum"),
     )
 
 

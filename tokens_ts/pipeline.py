@@ -6,7 +6,10 @@ partition granularity via the checkpoint manifest. Rerunning after a
 crash reprocesses only pending partitions; completed partitions are
 skipped (the manifest's done set, read once per invocation) and their
 tier output is untouched (writes are idempotent dynamic partition
-overwrites).
+overwrites). Each wave reads its input once: the raw write is the only
+job that scans it, and the wave's lineage (rows_in, token_checksum,
+points per table, max event time) is observed on the writes
+themselves (DataFrame.observe), not collected by jobs of its own.
 
 run_increment: append-only micro-batch — recomputes exactly the
 (source, day) tier partitions touched by the new rows, reading back
@@ -27,12 +30,11 @@ All tables live under a Catalog root:
 
 from __future__ import annotations
 
-import functools
 import time
 from collections.abc import Callable
 
 import pyspark.sql.functions as F
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 from tokens_ts import checkpoint, extract, tiers
 from tokens_ts.io.catalog import Catalog
@@ -41,34 +43,73 @@ TIER_NAMES = {"1m": "t1m", "1h": "t1h", "1d": "t1d"}
 
 
 def default_extraction(seq: DataFrame) -> DataFrame:
-    """Flagship extraction: full-array mean/max + point p7 per sequence."""
-    wide = extract.full_stats(seq, stats=["mean", "max"])
-    raw_full = extract.to_raw(wide)
-    raw_pt = extract.to_raw(extract.point(seq, 7))
-    return raw_full.unionByName(raw_pt)
+    """Flagship extraction: full-array mean/max + point p7 per sequence.
+
+    One row-local projection melted into raw rows, so the input is
+    scanned once: the same expressions and series ids as
+    to_raw(full_stats(seq, ["mean", "max"])) ∪ to_raw(point(seq, 7)),
+    whose two branches would each scan it. Every input row reaches the
+    output, which the backfill's input observation relies on."""
+    m = F.col("_m")
+    wide = extract._prep(seq).select(
+        "source",
+        "event_ts",
+        extract.arr_mean(m).alias("full_mean"),
+        extract.arr_max(m).alias("full_max"),
+        extract.select_point(m, 7).alias("point_p7"),
+    )
+    return extract.to_raw(wide)
 
 
 def _with_day(df: DataFrame, ts_col: str) -> DataFrame:
     return df.withColumn("day", F.to_date(F.col(ts_col)))
 
 
-def _raw_rows(
-    extraction: Callable[[DataFrame], DataFrame], seq: DataFrame, batch_id: str
-) -> DataFrame:
+def _raw_rows(seq: DataFrame, batch_id: str) -> DataFrame:
     """The raw table's rows for `seq`: extracted points with their day
     partition and producing batch id (the backfill run id, or the
     increment's batch id — the key the upsert dedups on). Raw reads
     declare this frame's schema."""
-    return _with_day(extraction(seq), "event_ts").withColumn(
+    return _with_day(default_extraction(seq), "event_ts").withColumn(
         "batch_id", F.lit(batch_id)
     )
+
+
+def _observe_by_source(
+    df: DataFrame, sources: list[str], **metrics: Callable[[Column], Column]
+) -> tuple[DataFrame, Callable[[], dict[str, dict]]]:
+    """Attach per-source aggregates to `df`'s next action, with no job
+    of their own: metrics[name](in_p) aggregates the rows of source p,
+    in_p being the predicate source = p. Returns the observed frame and
+    a reader that gives {source: {name: value}} once the action ran.
+
+    Callers observe only where no Exchange lies between the aggregate
+    and the action's result (the write), so a retried map task cannot
+    count twice."""
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        *[
+            fn(F.col("source") == p).alias(f"{name}_{i}")
+            for name, fn in metrics.items()
+            for i, p in enumerate(sources)
+        ],
+    )
+
+    def read() -> dict[str, dict]:
+        got = obs.get
+        return {
+            p: {name: got[f"{name}_{i}"] for name in metrics}
+            for i, p in enumerate(sources)
+        }
+
+    return observed, read
 
 
 def run_backfill(
     spark: SparkSession,
     seq: DataFrame,
     out_root: str,
-    extraction: Callable[[DataFrame], DataFrame] = default_extraction,
     max_partitions: int | None = None,
     fmt: str = "parquet",
     commit_batch: int = 1,
@@ -90,6 +131,13 @@ def run_backfill(
     distributed job, so one wave per partition keeps the cluster
     saturated; the sandbox default matches that production shape.
 
+    Each wave is one pass over its input: the raw write is the only
+    job that scans it, and the manifest row's values are observed on
+    the writes (_observe_by_source) — rows_in and token_checksum on the
+    wave input, points_raw and max_event_us on the raw rows, points_1m/
+    1h/1d on the tier rows (_write_tiers) — so no wave runs a lineage
+    job of its own.
+
     The 1m rollup needs no salt: the window is in its key, so a hot
     series spreads over its minutes, and with one document per grid
     slot of at least 1 s no 1m group holds more than 60 points.
@@ -104,11 +152,13 @@ def run_backfill(
     # ONE manifest read per invocation: resume set and attempt bases
     # both come from this collect
     summary = checkpoint.partition_summary(checkpoint.read_manifest(spark, cat))
-    part_ids = [
+    # sorted driver-side: an orderBy would add a sampling job and a
+    # range shuffle to this collect
+    part_ids = sorted(
         r["source"]
-        for r in seq.select("source").distinct().orderBy("source").collect()
+        for r in seq.select("source").distinct().collect()
         if not summary.get(r["source"], {}).get("done")
-    ]
+    )
     if max_partitions is not None:
         part_ids = part_ids[:max_partitions]
     if not part_ids:
@@ -121,58 +171,44 @@ def run_backfill(
     for i in range(0, len(part_ids), max(commit_batch, 1)):
         group = part_ids[i : i + max(commit_batch, 1)]
         t_wave = time.time()
-        batch = seq.where(F.col("source").isin(group))
+        in_wave = F.col("source").isin(group)
 
-        # lineage input side: row counts + token checksums (invariant carrier)
-        lin = {
-            r["partition_id"]: dict(r.asDict())
-            for r in checkpoint.token_checksum_by_partition(batch).collect()
-        }
-
-        raw = _raw_rows(extraction, batch, run_id)
+        # the wave's lineage rides on its writes: the input side (row
+        # counts + token checksums, the invariant carrier) and the raw
+        # side (point counts + max event time, the watermark carrier)
+        # are both observed by the raw write, the only input scan
+        batch, lineage_in = _observe_by_source(
+            seq.where(in_wave),
+            group,
+            rows_in=F.count_if,
+            token_checksum=checkpoint.token_checksum,
+        )
+        raw, lineage_raw = _observe_by_source(
+            _raw_rows(batch, run_id),
+            group,
+            points_raw=F.count_if,
+            max_event_us=lambda in_p: F.max(
+                F.when(in_p, F.unix_micros("event_ts"))
+            ),
+        )
         cat.overwrite_partitions(raw, "raw", ["source", "day"])
 
         raw_wave = (
             cat.read(spark, "raw", raw.schema)
-            .where(F.col("source").isin(group))
+            .where(in_wave)
             .drop("day", "batch_id")
         )
-        written = _write_tiers(spark, cat, raw_wave, F.col("source").isin(group))
-
-        # per-partition metrics from the written tables in ONE job:
-        # column-pruned scans of the just-written slices, unioned and
-        # counted per (table, source); raw also yields max event time —
-        # the watermark carrier
-        slices = [
-            raw_wave.select(
-                F.lit("raw").alias("t"), "source",
-                F.unix_micros("event_ts").alias("us"),
-            )
-        ] + [
-            df.select(
-                F.lit(t).alias("t"), "source", F.lit(None).cast("long").alias("us")
-            )
-            for t, df in written.items()
-        ]
-        counts: dict[str, dict[str, int]] = {p: {} for p in group}
-        for r in (
-            functools.reduce(DataFrame.unionByName, slices)
-            .groupBy("t", "source")
-            .agg(F.count("*").alias("n"), F.max("us").alias("us"))
-            .collect()
-        ):
-            counts[r["source"]][f"points_{r['t']}"] = r["n"]
-            if r["t"] == "raw":
-                counts[r["source"]]["max_event_us"] = r["us"]
+        points = _write_tiers(spark, cat, raw_wave, in_wave, group)
+        lin_in, lin_raw = lineage_in(), lineage_raw()
 
         wave_ms = (time.time() - t_wave) * 1000.0
         rows = [
             {
                 "partition_id": p,
-                "rows_in": lin.get(p, {}).get("rows_in", 0),
-                "token_checksum": lin.get(p, {}).get("token_checksum", 0),
                 "wall_ms": wave_ms / len(group),
-                **counts[p],
+                **lin_in[p],
+                **lin_raw[p],
+                **points[p],
             }
             for p in group
         ]
@@ -202,12 +238,15 @@ def run_backfill(
 
 
 def _write_tiers(
-    spark: SparkSession, cat: Catalog, raw: DataFrame, sel
-) -> dict[str, DataFrame]:
+    spark: SparkSession, cat: Catalog, raw: DataFrame, sel, sources: list[str]
+) -> dict[str, dict[str, int]]:
     """Write the three tiers of a raw slice as a true cascade: 1m is
     rolled up from `raw`, 1h merges the 1m slice read back from the
-    just-written table, and 1d merges the written 1h slice. Returns the
-    read-back slices by tier.
+    just-written table, and 1d merges the written 1h slice. Returns
+    {source: {points_1m, points_1h, points_1d}}: the rows each write
+    landed per source in `sources`, observed on the write itself (the
+    count sits above the rollup's Exchange, in the write's result
+    stage), so counting costs no job.
 
     `sel` must select whole (source, day) partitions — the backfill
     wave's sources, the increment's touched (source, day) set — and
@@ -217,17 +256,20 @@ def _write_tiers(
     are also filtered by `sel` before each write, so no overwrite can
     reach a partition outside the slice."""
     frame = tiers.rollup(raw, "1m")
-    written: dict[str, DataFrame] = {}
-    for tier, name in TIER_NAMES.items():
-        if written:
+    points: dict[str, dict[str, int]] = {p: {} for p in sources}
+    for i, (tier, name) in enumerate(TIER_NAMES.items()):
+        if i:
             frame = tiers.cascade(frame, tier)
-        cat.overwrite_partitions(
-            _with_day(frame, "window_start").where(sel), name, ["source", "day"]
+        out, observed = _observe_by_source(
+            _with_day(frame, "window_start").where(sel),
+            sources,
+            **{f"points_{tier}": F.count_if},
         )
-        frame = written[tier] = cat.read(
-            spark, name, tiers.TIER_SCHEMA
-        ).where(sel)
-    return written
+        cat.overwrite_partitions(out, name, ["source", "day"])
+        for p, n in observed().items():
+            points[p].update(n)
+        frame = cat.read(spark, name, tiers.TIER_SCHEMA).where(sel)
+    return points
 
 
 def _batch_id_and_count(new_seq: DataFrame) -> tuple[str, int]:
@@ -236,7 +278,7 @@ def _batch_id_and_count(new_seq: DataFrame) -> tuple[str, int]:
     maps to the same id, the basis for exactly-once), together with the
     row count so callers never rescan the input just for rows_in."""
     r = new_seq.agg(
-        F.bit_xor(F.xxhash64("doc_id", "tokens")).alias("cs"),
+        checkpoint.token_checksum().alias("cs"),
         F.count("*").alias("n"),
     ).collect()[0]
     return f"{(r['cs'] or 0) & ((1 << 64) - 1):016x}-{r['n']}", int(r["n"])
@@ -282,7 +324,6 @@ def run_increment(
     spark: SparkSession,
     new_seq: DataFrame,
     out_root: str,
-    extraction: Callable[[DataFrame], DataFrame] = default_extraction,
     fmt: str = "parquet",
     batch_id: str | None = None,
     _crash_after_raw: bool = False,
@@ -333,7 +374,7 @@ def run_increment(
     if checkpoint.is_done(spark, cat, marker):
         return {"touched": [], "batch_id": bid, "skipped": True}
 
-    new_raw = _raw_rows(extraction, new_seq, bid)
+    new_raw = _raw_rows(new_seq, bid)
     new_raw.cache()
     # one collect gives the touched partitions and, folded driver-side,
     # the batch's max event time (the watermark its manifest row carries)
@@ -358,7 +399,7 @@ def run_increment(
     raw_touched = (
         cat.read(spark, "raw", new_raw.schema).where(sel).drop("day", "batch_id")
     )
-    _write_tiers(spark, cat, raw_touched, sel)
+    _write_tiers(spark, cat, raw_touched, sel, srcs)
     if n_in < 0:
         n_in = new_seq.count()
     # the batch's max event time rides IN the completion row: the fold
