@@ -24,6 +24,19 @@ def spark():
     s.stop()
 
 
+@pytest.fixture
+def kolkata(spark):
+    """The shared session under Asia/Kolkata (UTC+5:30, no DST) for one
+    test, back to UTC afterwards: catches session-timezone assumptions
+    at the Python boundary, where LTZ timestamps cross in the session
+    zone."""
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Kolkata")
+    try:
+        yield spark
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 @pytest.fixture(scope="session")
 def testdata_root():
     """Driver-generated parquet fixtures; resolved from the env so the

@@ -195,6 +195,81 @@ def test_spark_segment_roundtrip(spark, seq_tiny):
 
 
 # ---------------------------------------------------------------------------
+# Edge shapes through the Spark path, under a non-UTC session
+# ---------------------------------------------------------------------------
+
+_RAW_DDL = "source string, series_id string, event_ts {}, value double"
+
+
+def _as_text(df):
+    """Rows rendered in the session zone; NaN and null stay distinct."""
+    import pyspark.sql.functions as F
+
+    rows = df.select(
+        "source",
+        "series_id",
+        F.col("event_ts").cast("string"),
+        F.col("value").cast("string"),
+    ).collect()
+    return sorted(map(tuple, rows), key=str)
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_spark_segment_roundtrip_non_utc_session(kolkata, ts_type):
+    """Under Asia/Kolkata, LTZ and NTZ input round-trip exactly and
+    keep their type. One segment holds a finite value, a NaN and a
+    null: NaN returns NaN and null returns null. A pre-epoch point and
+    a non-zero microsecond exercise the DoD header and escapes."""
+    from datetime import datetime
+
+    rows = [
+        ("s", "a", datetime(2026, 3, 1, 10, 31), 1.5),
+        ("s", "a", datetime(2026, 3, 1, 10, 40, 0, 7), float("nan")),
+        ("s", "a", datetime(2026, 3, 1, 10, 50), None),
+        ("s", "a", datetime(2026, 3, 1, 11, 45), -2.0),
+        ("s", "b", datetime(1969, 12, 31, 23, 59, 59, 999999), 0.0),
+    ]
+    raw = kolkata.createDataFrame(rows, _RAW_DDL.format(ts_type))
+    segs = codec.encode_segments(raw, "1h")
+    assert sorted(r["n"] for r in segs.collect()) == [1, 1, 3]
+    back = codec.decode_segments(segs)
+    assert back.schema["event_ts"].dataType == raw.schema["event_ts"].dataType
+    assert _as_text(back) == _as_text(raw)
+    got = {r[2]: r[3] for r in _as_text(back)}
+    assert [got[k] for k in sorted(got)[1:4]] == ["1.5", "NaN", None]
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_spark_segment_codec_empty_input(kolkata, ts_type):
+    """Empty input encodes to 0 segments and decodes to 0 rows, with
+    the declared column names and the input's types."""
+    raw = kolkata.createDataFrame([], _RAW_DDL.format(ts_type))
+    segs = codec.encode_segments(raw, "1h")
+    assert segs.columns == codec.SEGMENT_SCHEMA.names
+    assert segs.count() == 0
+    back = codec.decode_segments(segs)
+    assert [(f.name, f.dataType) for f in back.schema] == [
+        (f.name, f.dataType) for f in raw.schema
+    ]
+    assert back.count() == 0
+
+
+def test_token_blobs_empty_array_and_extreme_ids(spark):
+    """decode_token_blobs over an empty token array and the id range's
+    ends, 0 and 2^17 − 1."""
+    seq = spark.createDataFrame(
+        [("d0", "s", 0, []), ("d1", "s", 3, [0, 131071, 0]), ("d2", "s", 1, [131071])],
+        "doc_id string, source string, n_tok int, tokens array<int>",
+    )
+    blobs = codec.encode_token_blobs(seq)
+    assert {r["doc_id"]: r["enc_bytes"] for r in blobs.collect()} == {
+        "d0": 4, "d1": 4 + 7, "d2": 4 + 3,
+    }
+    back = sorted(map(tuple, codec.decode_token_blobs(blobs).collect()))
+    assert back == [("d0", "s", []), ("d1", "s", [0, 131071, 0]), ("d2", "s", [131071])]
+
+
+# ---------------------------------------------------------------------------
 # Corrupt / truncated blobs must raise versioned decode errors, not
 # surface raw numpy IndexErrors or silently-wrong values.
 # ---------------------------------------------------------------------------

@@ -158,8 +158,8 @@ def test_manifest_points_match_tables_after_backfill_and_increment(
 ):
     """Each manifest row's points_raw/1m/1h/1d equal its source's row
     counts in the four tables and max_event_us equals the raw maximum —
-    pins the wave's single fused count job, with two sources per wave
-    so the per-source split is exercised. The increment folds a new
+    pins the counts observed on the wave's writes, with two sources per
+    wave so the per-source split is exercised. The increment folds a new
     source, so the backfill rows must still match afterwards, and its
     batch row carries that source's raw maximum."""
     seq = grid.with_event_time(seq_tiny)

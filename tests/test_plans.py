@@ -503,9 +503,29 @@ def test_lttb_single_scan_single_shuffle(spark, events_path):
         )
     )
     assert plan.count("Scan parquet") == 1, plan
-    assert "FlatMapGroupsInPandas" in plan, plan
+    assert "FlatMapGroupsInArrow" in plan, plan
     assert "SinglePartition" not in plan, plan
     assert "hashpartitioning(sid" in plan, plan
+
+
+def test_codec_boundary_is_arrow(spark, seq_tiny):
+    """The codec's Python stages take Arrow arrays, not pandas: the
+    three encoders are scalar Arrow UDFs (list offsets and values go to
+    the numpy kernels as-is) and both decoders plan as MapInArrow."""
+    from pyspark.util import PythonEvalType
+
+    from tokens_ts import codec
+
+    for udf in (codec._enc_ts_udf, codec._enc_val_udf, codec._enc_tokens_udf):
+        assert udf.evalType == PythonEvalType.SQL_SCALAR_ARROW_UDF, udf
+    raw = extract.to_raw(extract.point(seq_tiny, 7))
+    for dec in (
+        codec.decode_segments(codec.encode_segments(raw, "1h")),
+        codec.decode_token_blobs(codec.encode_token_blobs(seq_tiny)),
+    ):
+        plan = _plan(dec)
+        assert "MapInArrow" in plan, plan
+        assert "MapInPandas" not in plan, plan
 
 
 def test_bm25_no_vocab_shuffle_and_take_ordered(spark, events_path):

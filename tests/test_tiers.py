@@ -313,6 +313,56 @@ def test_lttb_sequential_anchor_picks_spikes(spark):
     ]
 
 
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+@pytest.mark.parametrize("anchor", ["centroid", "selected"])
+def test_lttb_non_utc_session_equals_utc(kolkata, ts_type, anchor):
+    """Under Asia/Kolkata, LTTB picks the same points as under UTC, for
+    LTZ and NTZ input: LTZ timestamps cross the Python boundary in the
+    session zone and must come back as the same instants."""
+    from datetime import datetime, timedelta
+
+    from tokens_ts import tiers
+
+    t0 = datetime(2026, 1, 1, 3, 10)
+    rows = [
+        (sid, t0 + timedelta(minutes=37 * i), float((i * 7919 + k) % 23))
+        for k, sid in enumerate("AB")
+        for i in range(40)
+    ]
+    df = kolkata.createDataFrame(rows, f"sid string, wts {ts_type}, v double")
+    ts_key = (
+        F.unix_micros("event_ts")
+        if ts_type == "timestamp"
+        else F.col("event_ts").cast("string")
+    )
+
+    def picks(session_tz):
+        kolkata.conf.set("spark.sql.session.timeZone", session_tz)
+        out = tiers.downsample_lttb(
+            df, n_out=8, keys=["sid"], ts_col="wts", value_col="v", anchor=anchor
+        )
+        assert out.schema["event_ts"].dataType == df.schema["wts"].dataType
+        return sorted(map(tuple, out.select("sid", "bucket", ts_key, "value").collect()))
+
+    utc = picks("UTC")
+    assert len(utc) == 16
+    assert picks("Asia/Kolkata") == utc
+
+
+@pytest.mark.parametrize("ts_type", ["timestamp", "timestamp_ntz"])
+def test_lttb_empty_input(kolkata, ts_type):
+    """Empty input returns 0 rows with the declared schema."""
+    from tokens_ts import tiers
+
+    df = kolkata.createDataFrame(
+        [], f"source string, series_id string, event_ts {ts_type}, value double"
+    )
+    out = tiers.downsample_lttb(df, n_out=8)
+    assert out.columns == ["source", "series_id", "bucket", "event_ts", "value"]
+    assert out.schema["event_ts"].dataType == df.schema["event_ts"].dataType
+    assert out.count() == 0
+
+
 def test_zorder_layout_rectangle_bound_and_partition(spark):
     """The z-curve guarantee as a test: with 8-bit keys and a 6-bit
     prefix, every bucket pins the top 3 bits of BOTH dims, so u_span

@@ -3,11 +3,13 @@
 Delta-of-delta timestamp encoding and Gorilla XOR value compression
 (Pelkonen et al., "Gorilla: A Fast, Scalable, In-Memory Time Series
 Database", VLDB 2015 — public paper; absent from the reference, which
-mandates them via BASELINE.json:6). Exposed as *vectorized Arrow UDFs*:
-segment framing via ``groupBy(...).applyInPandas`` (one blob row per
-(source, series_id, segment)), decode via ``mapInPandas`` — the only
-Python-execution stages in the engine, and they move data as Arrow
-batches, never per-Spark-row Python (BASELINE.json:15).
+mandates them via BASELINE.json:6). The Spark boundary is Arrow end
+to end (BASELINE.json:15): segments are framed JVM-side (one blob row
+per (source, series_id, segment)) and encoded by scalar ``arrow_udf``s
+that hand each kernel a slice of the list column's flat child array
+(offsets + values; the validity bitmap is the null mask); decode is
+``mapInArrow``, building each output column as one Arrow array. No
+pandas object is made on either side.
 
 Bit layout (normative; independently re-implemented by tests/oracle.py
 as a cross-check — the two implementations must produce identical
@@ -51,7 +53,7 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame
@@ -62,8 +64,8 @@ from pyspark.sql.types import (
     StringType,
     StructField,
     StructType,
+    TimestampNTZType,
     TimestampType,
-    DoubleType,
 )
 
 from tokens_ts import config as C
@@ -434,39 +436,29 @@ SEGMENT_SCHEMA = StructType(
     ]
 )
 
-RAW_SCHEMA = StructType(
-    [
-        StructField("source", StringType()),
-        StructField("series_id", StringType()),
-        StructField("event_ts", TimestampType()),
-        StructField("value", DoubleType()),
-    ]
-)
+
+def _spans(lists: pa.ListArray) -> Iterator[tuple[int, int]]:
+    """(start, stop) of each list cell in the shared child `lists.values`."""
+    off = lists.offsets.to_numpy()
+    return zip(off[:-1], off[1:])
 
 
-from pyspark.sql.functions import pandas_udf
+@F.arrow_udf(BinaryType())
+def _enc_ts_udf(ts_lists: pa.Array) -> pa.Array:
+    ts = ts_lists.values.to_numpy()
+    return pa.array([encode_ts_dod(ts[a:b]) for a, b in _spans(ts_lists)], pa.binary())
 
 
-@pandas_udf(BinaryType())
-def _enc_ts_udf(ts_lists: pd.Series) -> pd.Series:
-    return ts_lists.map(
-        lambda a: encode_ts_dod(np.asarray(a, dtype=np.int64))
-    )
-
-
-@pandas_udf(BinaryType())
-def _enc_val_udf(val_lists: pd.Series, null_lists: pd.Series) -> pd.Series:
-    # Arrow list<double> → numpy turns SQL nulls into NaN, conflating
-    # them with genuine NaN data — the explicit mask column keeps them
-    # distinct (code-11 nulls vs bit-pattern NaNs in the v2 format)
-    return pd.Series(
-        [
-            encode_val_xor(
-                np.asarray(a, dtype=np.float64),
-                np.asarray(m, dtype=bool),
-            )
-            for a, m in zip(val_lists, null_lists)
-        ]
+@F.arrow_udf(BinaryType())
+def _enc_val_udf(val_lists: pa.Array) -> pa.Array:
+    # the child's validity bitmap is the null mask (code 11); NaN data
+    # is a valid double and keeps its bit pattern
+    child = val_lists.values
+    v = child.to_numpy(zero_copy_only=False)
+    null = child.is_null().to_numpy(zero_copy_only=False)
+    return pa.array(
+        [encode_val_xor(v[a:b], null[a:b]) for a, b in _spans(val_lists)],
+        pa.binary(),
     )
 
 
@@ -476,34 +468,31 @@ def encode_segments(raw: DataFrame, segment: str = "1h") -> DataFrame:
 
     Shape: the grouping + time-sort happens JVM-side
     (collect_list → sort_array inside a hash aggregate, one shuffle on
-    the segment key), and the Python stage is a *scalar* Arrow
-    pandas_udf over whole batches of segments — thousands of segments
-    per Arrow round-trip. The earlier applyInPandas formulation paid
-    ~3 ms of per-group overhead, 10× the actual encoding cost on small
+    the segment key), and the Python stage is two scalar Arrow UDFs
+    over whole batches of segments — thousands of segments per Arrow
+    round-trip, each kernel fed a numpy slice of the list's child
+    array. The earlier applyInPandas formulation paid ~3 ms of
+    per-group overhead, 10× the actual encoding cost on small
     segments. Segment length bounds both the aggregation buffer and
-    the UDF row size."""
-    from pyspark.sql.types import TimestampNTZType
-
-    is_ntz = isinstance(raw.schema["event_ts"].dataType, TimestampNTZType)
-    if is_ntz:
-        # wall-clock micros, session-timezone-independent
+    the UDF row size. seg_start keeps the input's timestamp type."""
+    seg = F.date_trunc(C.TIER_TRUNC[segment], F.col("event_ts"))
+    if isinstance(raw.schema["event_ts"].dataType, TimestampNTZType):
+        # wall-clock micros, session-timezone-independent; date_trunc
+        # returns LTZ, so seg_start goes back to NTZ for decode_segments
         ts_us = F.expr(
             "timestampdiff(MICROSECOND, TIMESTAMP_NTZ '1970-01-01 00:00:00', event_ts)"
         )
+        seg = seg.cast(TimestampNTZType())
     else:
         ts_us = F.unix_micros("event_ts")
-    seg = F.date_trunc(C.TIER_TRUNC[segment], F.col("event_ts")).alias("seg_start")
     framed = raw.select(
-        "source", "series_id", seg, ts_us.alias("_ts_us"), "value",
+        "source", "series_id", seg.alias("seg_start"), ts_us.alias("_ts_us"), "value",
     )
     agg = framed.groupBy("source", "series_id", "seg_start").agg(
         F.sort_array(F.collect_list(F.struct("_ts_us", "value"))).alias("_pts")
     )
     ts_arr = F.transform("_pts", lambda s: s["_ts_us"])
-    # null slot → (0.0, true): the mask column makes nulls explicit and
-    # the placeholder keeps the value array dense for Arrow
-    val_arr = F.transform("_pts", lambda s: F.coalesce(s["value"], F.lit(0.0)))
-    null_arr = F.transform("_pts", lambda s: s["value"].isNull())
+    val_arr = F.transform("_pts", lambda s: s["value"])
     n = F.size("_pts")
     return agg.select(
         "source",
@@ -511,7 +500,7 @@ def encode_segments(raw: DataFrame, segment: str = "1h") -> DataFrame:
         "seg_start",
         n.alias("n"),
         _enc_ts_udf(ts_arr).alias("ts_blob"),
-        _enc_val_udf(val_arr, null_arr).alias("val_blob"),
+        _enc_val_udf(val_arr).alias("val_blob"),
         (n * 16).cast("long").alias("raw_bytes"),
     ).withColumn(
         "enc_bytes",
@@ -522,71 +511,61 @@ def encode_segments(raw: DataFrame, segment: str = "1h") -> DataFrame:
 _DECODE_CHUNK_ROWS = 250_000
 
 
-def _decode_batches(ntz: bool):
-    def fn(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            outs: list[pd.DataFrame] = []
-            rows = 0
-            for r in pdf.itertuples(index=False):
-                ts = decode_ts_dod(bytes(r.ts_blob), r.n)
-                vals, null = decode_val_xor(bytes(r.val_blob), r.n)
-                # nullable Float64 keeps SQL nulls distinct from NaN
-                # data through the Arrow round-trip (the pd.array
-                # constructor would coerce NaN→NA; the mask form not)
-                value = pd.arrays.FloatingArray(vals, mask=null.copy())
-                # NTZ target: naive wall-clock micros. LTZ target:
-                # tz-aware UTC instants — correct under ANY session
-                # timezone (a naive series would be re-interpreted in
-                # the session zone)
-                ets = pd.to_datetime(ts, unit="us", utc=not ntz)
-                outs.append(
-                    pd.DataFrame(
-                        {
-                            "source": r.source,
-                            "series_id": r.series_id,
-                            "event_ts": ets,
-                            "value": value,
-                        }
-                    )
-                )
-                rows += int(r.n)
+def _decode_batches(ts_type: pa.DataType):
+    def chunk(batch, lo, hi, ts, vals, nulls) -> pa.RecordBatch:
+        n = batch.column("n").to_numpy()[lo:hi]
+        seg = pa.array(np.repeat(np.arange(lo, hi), n))
+        return pa.RecordBatch.from_arrays(
+            [
+                batch.column("source").take(seg),
+                batch.column("series_id").take(seg),
+                pa.array(np.concatenate(ts), ts_type),
+                # the mask becomes the validity bitmap: SQL nulls stay
+                # nulls, NaN data stays a valid NaN
+                pa.array(np.concatenate(vals), mask=np.concatenate(nulls)),
+            ],
+            names=["source", "series_id", "event_ts", "value"],
+        )
+
+    def fn(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            ns = batch.column("n").to_numpy().tolist()
+            ts_blobs = batch.column("ts_blob").to_pylist()
+            val_blobs = batch.column("val_blob").to_pylist()
+            lo, rows, ts, vals, nulls = 0, 0, [], [], []
+            for i, n in enumerate(ns):
+                ts.append(decode_ts_dod(ts_blobs[i], n))
+                v, null = decode_val_xor(val_blobs[i], n)
+                vals.append(v)
+                nulls.append(null)
+                rows += n
                 # yield in bounded chunks: an Arrow input batch of 10k
                 # segments × hundreds of points each would otherwise
-                # concat into one multi-million-row frame PER WORKER —
-                # at 32 concurrent workers that peak (frames + Arrow
-                # copies) evicts the page cache and the stage
-                # anti-scales (measured: decode @32 slower than @8 in
-                # wall terms at 100M points; bounded chunks remove the
-                # spike without touching the per-point numpy math)
-                if rows >= _DECODE_CHUNK_ROWS:
-                    yield pd.concat(outs, ignore_index=True)
-                    outs, rows = [], 0
-            if outs:
-                yield pd.concat(outs, ignore_index=True)
+                # become one multi-million-row batch PER WORKER — at 32
+                # concurrent workers that peak evicts the page cache
+                # and the stage anti-scales (measured: decode @32
+                # slower than @8 in wall terms at 100M points; bounded
+                # chunks remove the spike without touching the
+                # per-point numpy math)
+                if rows >= _DECODE_CHUNK_ROWS or i == len(ns) - 1:
+                    yield chunk(batch, lo, i + 1, ts, vals, nulls)
+                    lo, rows, ts, vals, nulls = i + 1, 0, [], [], []
 
     return fn
 
 
 def decode_segments(blobs: DataFrame) -> DataFrame:
-    """Inverse of encode_segments — blob rows back to raw points.
+    """Inverse of encode_segments — blob rows back to raw points, one
+    mapInArrow stage.
 
     Output event_ts type mirrors the input (seg_start carries it):
     NTZ in → NTZ out, so the round trip is wall-clock-exact regardless
-    of session timezone."""
-    from pyspark.sql.types import TimestampNTZType
-
-    ntz = isinstance(blobs.schema["seg_start"].dataType, TimestampNTZType)
-    schema = RAW_SCHEMA
-    if ntz:
-        schema = StructType(
-            [
-                StructField("source", StringType()),
-                StructField("series_id", StringType()),
-                StructField("event_ts", TimestampNTZType()),
-                StructField("value", DoubleType()),
-            ]
-        )
-    return blobs.mapInPandas(_decode_batches(ntz), schema=schema)
+    of session timezone; LTZ out is UTC instants, which Spark reads
+    the same under any session timezone."""
+    ts = blobs.schema["seg_start"].dataType.simpleString()
+    schema = f"source string, series_id string, event_ts {ts}, value double"
+    ts_type = pa.timestamp("us", tz=None if ts == "timestamp_ntz" else "UTC")
+    return blobs.mapInArrow(_decode_batches(ts_type), schema=schema)
 
 
 # ---------------------------------------------------------------------------
@@ -636,10 +615,11 @@ def decode_tokens_fixed(data: bytes, width: int = TOKEN_BITS) -> np.ndarray:
     return vals.astype(np.int32)
 
 
-@pandas_udf(BinaryType())
-def _enc_tokens_udf(tok_lists: pd.Series) -> pd.Series:
-    return tok_lists.map(
-        lambda a: encode_tokens_fixed(np.asarray(a, dtype=np.uint32))
+@F.arrow_udf(BinaryType())
+def _enc_tokens_udf(tok_lists: pa.Array) -> pa.Array:
+    tok = tok_lists.values.to_numpy()
+    return pa.array(
+        [encode_tokens_fixed(tok[a:b]) for a, b in _spans(tok_lists)], pa.binary()
     )
 
 
@@ -669,21 +649,26 @@ def encode_token_blobs(seq: DataFrame) -> DataFrame:
     ).withColumn("enc_bytes", F.octet_length("tok_blob").cast("long"))
 
 
+def _decode_token_batches(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+    for batch in it:
+        toks = [decode_tokens_fixed(b) for b in batch.column("tok_blob").to_pylist()]
+        offsets = np.cumsum([0] + [t.size for t in toks], dtype=np.int32)
+        ids = np.concatenate([np.empty(0, np.int32), *toks])
+        yield pa.RecordBatch.from_arrays(
+            [
+                batch.column("doc_id"),
+                batch.column("source"),
+                pa.ListArray.from_arrays(pa.array(offsets), pa.array(ids)),
+            ],
+            names=["doc_id", "source", "tokens"],
+        )
+
+
 def decode_token_blobs(blobs: DataFrame) -> DataFrame:
-    """Inverse of encode_token_blobs → (doc_id, source, tokens)."""
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "source": pdf["source"],
-                    "tokens": pdf["tok_blob"].map(
-                        lambda b: decode_tokens_fixed(bytes(b)).tolist()
-                    ),
-                }
-            )
-
-    return blobs.coalesce(_arrow_parts(blobs)).mapInPandas(
-        batches, schema="doc_id string, source string, tokens array<int>"
+    """Inverse of encode_token_blobs → (doc_id, source, tokens), one
+    mapInArrow stage: the decoded id arrays of a batch become one
+    ListArray."""
+    return blobs.coalesce(_arrow_parts(blobs)).mapInArrow(
+        _decode_token_batches,
+        schema="doc_id string, source string, tokens array<int>",
     )

@@ -642,11 +642,14 @@ def downsample_lttb(
     binned frame in FOUR places (count, centroids, candidates,
     endpoints), and Spark plans that as four separate scans of the
     input (no exchange reuse across window/agg branches — measured).
-    One applyInPandas = ONE scan, ONE shuffle on the key, then a
-    vectorized numpy pass whose state is the key's own series —
-    bounded by the tier calendar (decimate tiers, not raw corpora;
-    same per-key-memory contract as holt_linear). Output is ≤ n_out
-    rows per key."""
+    One applyInArrow = ONE scan, ONE shuffle on the key, then a
+    vectorized numpy pass over the group's Arrow columns whose state
+    is the key's own series — bounded by the tier calendar (decimate
+    tiers, not raw corpora; same per-key-memory contract as
+    holt_linear). Output is ≤ n_out rows per key, with event_ts of the
+    input's type."""
+    import pyarrow as pa
+
     if anchor not in ("centroid", "selected"):
         raise ValueError(f"anchor must be centroid/selected, got {anchor!r}")
     keys = list(keys) if keys is not None else list(KEYS)
@@ -661,28 +664,23 @@ def downsample_lttb(
     )
     schema = f"{key_fields}, bucket bigint, event_ts {ts_type}, value double"
     sequential = anchor == "selected"
+    # Spark hands LTZ in as the session zone but reads it back as UTC
+    ts_out = pa.timestamp("us", tz=None if ts_type == "timestamp_ntz" else "UTC")
 
-    def _lttb(pdf):
+    def _lttb(tbl):
         import numpy as np
 
-        pdf = pdf.sort_values("_ts", kind="mergesort").reset_index(drop=True)
-        n = len(pdf)
-        if n == 0:
-            return pdf.iloc[0:0][[*keys]].assign(
-                bucket=np.array([], dtype="int64"),
-                event_ts=pdf["_ts"].iloc[0:0],
-                value=np.array([], dtype="float64"),
-            )
         # micros to match unix_micros/epoch_us in the SQL oracle —
         # the e6-rounded area ranking must see identical doubles
-        x = (pdf["_ts"].to_numpy().astype("datetime64[us]").astype("int64")).astype(
-            "float64"
-        )
-        v = pdf["_v"].to_numpy(dtype="float64")
+        us = tbl.column("_ts").cast(pa.int64()).to_numpy()
+        order = np.argsort(us, kind="mergesort")
+        x = us[order].astype("float64")
+        v = tbl.column("_v").to_numpy()[order]
+        n = x.size
         idx = np.arange(n)
         g = np.empty(n, dtype="int64")
         if n <= 2:
-            g[:] = [-1, m][: n] if n == 1 else [-1, m]
+            g[:] = [-1, m][:n]
         else:
             g[1:-1] = np.floor((idx[1:-1] - 1) * float(m) / (n - 2)).astype(
                 "int64"
@@ -697,7 +695,7 @@ def downsample_lttb(
         with np.errstate(invalid="ignore"):
             cx = np.where(cnt > 0, sx / np.maximum(cnt, 1.0), np.nan)
             cy = np.where(cnt > 0, sv / np.maximum(cnt, 1.0), np.nan)
-        picks = [0] if n >= 1 else []
+        picks = [0]
         ax, ay = cx[0], cy[0]
         for b in range(m):
             cand = np.nonzero(g == b)[0]
@@ -724,13 +722,15 @@ def downsample_lttb(
         if n >= 2:
             picks.append(n - 1)
         sel = np.array(sorted(set(picks)), dtype="int64")
-        out = pdf.iloc[sel][[*keys]].copy()
-        out["bucket"] = g[sel]
-        out["event_ts"] = pdf["_ts"].iloc[sel].to_numpy()
-        out["value"] = v[sel]
-        return out
+        return (
+            tbl.select(keys)
+            .take(order[sel])
+            .append_column("bucket", pa.array(g[sel]))
+            .append_column("event_ts", pa.array(us[order[sel]], ts_out))
+            .append_column("value", pa.array(v[sel]))
+        )
 
-    return pts.groupBy(*keys).applyInPandas(_lttb, schema=schema)
+    return pts.groupBy(*keys).applyInArrow(_lttb, schema=schema)
 
 
 def zorder_key(
